@@ -21,14 +21,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..compat import bcount
-from ..operators.scans import scratch_dir
+from ..sources.derived import build_once, input_fingerprint, scratch_dir
 from ..sources.tables import load_table
 
 N_PROBES = 10  # probe set: vec_id < 10 (bounded so exact stays cheap)
 TOP_K = 5
 
 # Persisted ANN index cache (IVF inverted lists + centroid table).
-# Keyed by corpus path+mtime+params so a changed table rebuilds; shared
+# Keyed by the input fingerprint (sources/derived.py) + k, so a changed
+# or regenerated table rebuilds; published atomically (tmp + rename) and shared
 # across processes so the driver sweep and bench pay the KMeans fit at
 # most once per corpus. Override location via SPARK_GRAFT_ANN_CACHE.
 _ANN_CACHE_ROOT = os.environ.get(
@@ -147,14 +148,7 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_dir(sf_dir: str, k: int) -> str:
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = int(os.stat(src).st_mtime)
-    except OSError:
-        mtime = 0
-    key = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{mtime}|{k}".encode()
-    ).hexdigest()[:16]
+    key = hashlib.md5(f"{input_fingerprint(sf_dir)}|{k}".encode()).hexdigest()[:16]
     return os.path.join(_ANN_CACHE_ROOT, f"ivf_k{k}_{key}")
 
 
@@ -598,24 +592,18 @@ def assign_frozen(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
 
 def _upsert_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """(hist_indexed_dir, centroids_dir, delta_dir): a history-only IVF
-    index (built once, marker-cached) plus the new batch assigned with
+    index (built once per input state by build_once) plus the new batch assigned with
     the frozen quantizer and written as a delta commit."""
-    import inspect
-
     root = scratch_dir("ann_ivf_upsert", sf_dir)
     hist_dir = os.path.join(root, "indexed")
     cent_dir = os.path.join(root, "centroids")
     delta_dir = os.path.join(root, "delta")
-    fp = hashlib.md5(
-        (inspect.getsource(assign_frozen) + str((_UPSERT_MOD, _UPSERT_K))).encode()
-    ).hexdigest()[:12]
-    marker = os.path.join(root, f"_built-{fp}")
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if not os.path.isdir(marker):
+
+    def build() -> None:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        shutil.rmtree(root, ignore_errors=True)
         hist = emb.where(F.col("vec_id") % _UPSERT_MOD != 0)
         vec = hist.withColumn(
             "vec", array_to_vector(F.col("embedding").cast("array<double>"))
@@ -623,17 +611,18 @@ def _upsert_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
         model = KMeans(
             k=_UPSERT_K, seed=42, featuresCol="vec", predictionCol="cell"
         ).fit(vec.limit(_IVF_FIT_SAMPLE))
-        model.transform(vec).select("vec_id", "embedding", "cell").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(hist_dir)
+        model.transform(vec).select("vec_id", "embedding", "cell").write.partitionBy(
+            "cell"
+        ).parquet(hist_dir)
         spark.createDataFrame(
             [
                 (i, [float(x) for x in c])
                 for i, c in enumerate(model.clusterCenters())
             ],
             "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cent_dir)
-        os.makedirs(marker, exist_ok=True)
+        ).coalesce(1).write.parquet(cent_dir)
+
+    build_once(root, sf_dir, build, (_UPSERT_MOD, _UPSERT_K, _IVF_FIT_SAMPLE))
     new = emb.where(F.col("vec_id") % _UPSERT_MOD == 0).localCheckpoint()
     centroids = spark.read.parquet(cent_dir)
     assign_frozen(new, centroids).write.mode("overwrite").partitionBy(

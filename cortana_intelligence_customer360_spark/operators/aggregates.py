@@ -446,7 +446,7 @@ def agg_time_bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure the continuous-aggregate pattern exists to avoid. The
     materialized 15-min table is also what serves incremental refresh
     in a real deployment."""
-    from .scans import scratch_dir
+    from ..sources.derived import scratch_dir
 
     ev = load_table(spark, sf_dir, "events")
     ev.groupBy(
@@ -1486,7 +1486,7 @@ def agg_regr_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.1e20, and the base-1e7 three-limb LONG split that keeps
     # exactness was implemented and MEASURED 3.3x slower than the boxed
     # decimal sum (per-row Int128 limb extraction costs more than the
-    # boxed aggregation saves — tools/r12/regr_proto.py, r12 report §
+    # boxed aggregation saves — OPTIMIZATION_r12.md §
     # agg_regr_family), so the two wide sums stay decimal: that is the
     # exactness contract at minimum measured cost.
     dec = "decimal(38,10)"

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..compat import bcount, dsum, dsum_sql, epoch_us
+from ..sources.derived import build_once, scratch_dir
 from ..sources.tables import load_table
 
 
@@ -301,8 +302,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    from .scans import scratch_dir
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     write_bucketed(
         orders,
@@ -908,8 +907,6 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     query pins the OTHER half — the runtime filter must not change the
     answer (plain-SQL oracle). Executed to scratch parquet inside the
     conf scope because runtime filters are planned at action time."""
-    from .scans import scratch_dir
-
     out = scratch_dir("join_bloom_runtime", sf_dir)
     df = bloom_star_join(spark, sf_dir)
     _conf_scope(
@@ -1028,8 +1025,6 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a DIFFERENT key than the join, so the skew split's partition
     duplication is legal and re-shuffled away). Materialized to
     scratch inside the conf scope — AQE decides splits at runtime."""
-    from .scans import scratch_dir
-
     out = scratch_dir("join_skew_aqe", sf_dir)
     df = aqe_skew_join(spark, sf_dir)
     _conf_scope(
@@ -1129,23 +1124,22 @@ def join_partition_pruning_dynamic(spark: SparkSession, sf_dir: str) -> DataFram
     scanning 2/5 of the fact table and all of it. The result is the
     joined revenue rollup, fully oracle-checked; the dim is derived
     from the SAME orders table so the oracle needs no scratch state."""
-    import os
-
-    from .scans import scratch_dir
-
     out = scratch_dir("join_dpp_fact", sf_dir)
-    orders = load_table(spark, sf_dir, "orders")
-    # Reuse only a COMPLETED prior write: the _SUCCESS marker is written
-    # after every partition commits, so dir existence alone (which an
-    # interrupted write also leaves behind) is not trusted.
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
     dim_dir = scratch_dir("join_dpp_dim", sf_dir)
-    if not os.path.exists(os.path.join(dim_dir, "_SUCCESS")):
+
+    def build_fact() -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        orders.write.partitionBy("o_orderpriority").parquet(out)
+
+    def build_dim() -> None:
+        orders = load_table(spark, sf_dir, "orders")
         orders.select(F.col("o_orderpriority").alias("priority")).distinct().select(
             "priority",
             F.substring("priority", 1, 1).cast("int").alias("rank_class"),
-        ).write.mode("overwrite").parquet(dim_dir)
+        ).write.parquet(dim_dir)
+
+    build_once(out, sf_dir, build_fact)
+    build_once(dim_dir, sf_dir, build_dim)
     fact = spark.read.parquet(out)
     dim = spark.read.parquet(dim_dir).where(F.col("rank_class") <= 2)
     return (

@@ -233,7 +233,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(delta + MV), not O(raw); the oracle recomputes the full
     aggregate from scratch and must hash-match the merged MV exactly,
     which is precisely the incremental-view-maintenance contract."""
-    from .scans import scratch_dir
+    from ..sources.derived import scratch_dir
 
     ev = load_table(spark, sf_dir, "events")
     dec_sum = lambda c: F.sum(F.col(c).cast("decimal(30,6)"))  # noqa: E731

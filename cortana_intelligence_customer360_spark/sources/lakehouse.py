@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compat import bcount, dsum, dsum_sql
+from .derived import scratch_dir
 from .tables import load_table
 
 
@@ -201,17 +202,11 @@ class ManifestTable:
 # -- registered queries -----------------------------------------------------
 
 
-def _scratch(qid: str, sf_dir: str) -> str:
-    from ..operators.scans import scratch_dir
-
-    return scratch_dir(qid, sf_dir)
-
-
 def _build_orders_table(spark: SparkSession, sf_dir: str, qid: str) -> ManifestTable:
     """Deterministic 3-commit table: append orderkey%3==0, append %3==1,
     then OVERWRITE with the non-'F' subset. Rebuilt fresh per call so
     the query is idempotent under driver re-runs."""
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -266,7 +261,7 @@ _PRUNE_PARTS = 8
 
 
 def _build_ranged_table(spark: SparkSession, sf_dir: str, qid: str) -> ManifestTable:
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -328,7 +323,7 @@ def lake_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     files and re-scanning years of history per refresh. The oracle is
     the from-scratch aggregate — the MV invariant."""
     qid = "lake_incremental_mv"
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -421,7 +416,7 @@ def lake_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count drop and pre-compaction time travel are pinned in
     tests/test_lakehouse.py."""
     qid = "lake_compact"
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -463,7 +458,7 @@ def lake_sketch_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import hll_output, registers_from
 
     qid = "lake_sketch_mv"
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -505,7 +500,7 @@ def lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     file lists) plus unlink syscalls — file-count work on the driver,
     exactly how real table formats implement it; no data is read."""
     qid = "lake_vacuum"
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -587,7 +582,7 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: schema reconcile is a footer-only concern (mergeSchema runs
     a distributed footer merge, no data read); the data pass is one
     aggregate over the unioned files."""
-    root = _scratch("lake_schema_evolution", sf_dir)
+    root = scratch_dir("lake_schema_evolution", sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -644,7 +639,7 @@ ORACLE["lake_schema_evolution"] = _SCHEMA_EVOLUTION_SQL
 
 
 def _build_dv_table(spark: SparkSession, sf_dir: str, qid: str):
-    root = _scratch(qid, sf_dir)
+    root = scratch_dir(qid, sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -799,7 +794,7 @@ def lake_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     The staged-vs-published divergence is pinned in
     tests/test_lakehouse.py; this query aggregates the published view,
     so the oracle is the clean orders table."""
-    root = _scratch("lake_write_audit_publish", sf_dir)
+    root = scratch_dir("lake_write_audit_publish", sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     t = ManifestTable(root)
@@ -854,7 +849,7 @@ ORACLE["lake_write_audit_publish"] = _WAP_SQL
 
 
 def lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = _scratch("lake_partition_evolution", sf_dir)
+    root = scratch_dir("lake_partition_evolution", sf_dir)
     if os.path.isdir(root):
         shutil.rmtree(root)
     orders = load_table(spark, sf_dir, "orders")
@@ -989,7 +984,7 @@ def lake_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_head = src.latest_version()
     src_files_before = [f["path"] for f in src.manifest()["files"]]
     clone = shallow_clone(
-        src, _scratch("lake_shallow_clone_dst", sf_dir)
+        src, scratch_dir("lake_shallow_clone_dst", sf_dir)
     )
     orders = load_table(spark, sf_dir, "orders")
     clone.commit(

@@ -21,14 +21,16 @@ from __future__ import annotations
 
 import itertools
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..compat import bcount, dsum, dsum_sql, epoch_us_sql
-from ..operators.scans import _EVENTS_RAW_SCHEMA, scratch_dir
+from ..compat import bcount, dsum, dsum_sql, epoch_us, epoch_us_sql
+from ..operators.scans import _EVENTS_RAW_SCHEMA
 from ..operators.sketches import _hll_sql
+from ..sources.derived import build_once, scratch_dir
 from ..sources.tables import ensure_session_confs, load_table, raw_ts_to_timestamp
 
 _SEQ = itertools.count(1)  # single next() call is atomic under CPython
@@ -66,49 +68,67 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", raw_ts_to_timestamp("ts"))
 
 
-def _events_multifile_src(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the events table as _MULTI_FILES time-range parquet
-    files (once per sf_dir) so a maxFilesPerTrigger=1 stream replays it
-    as a sequence of chronological micro-batches — the state store must
-    then merge state ACROSS batches instead of seeing one big batch."""
-    src = scratch_dir("events_multifile", sf_dir)
-    if not os.path.isdir(os.path.join(src, "_done")):
-        ensure_session_confs(spark)
-        # Normalize through the batch loader, then store ts as raw
-        # epoch-µs longs: the replay read below is one forced-long
-        # schema + magnitude branch regardless of how the source dir
-        # encoded its timestamps (testdata int64-ns vs Spark INT96).
-        from ..compat import epoch_us
+def _replay_src(
+    spark: SparkSession,
+    sf_dir: str,
+    qid: str,
+    frame: Callable[[SparkSession, str], DataFrame],
+    key: str,
+    n_files: int = _MULTI_FILES,
+    sentinel: Callable[[DataFrame, str], None] | None = None,
+) -> str:
+    """Materialize ``frame(spark, sf_dir)`` (once per input state, see
+    sources/derived.py) as ``n_files`` ``key``-range parquet files, plus
+    the file ``sentinel(df, out)`` may add, so a maxFilesPerTrigger=1
+    stream replays it as a sequence of ordered micro-batches — the
+    state store must then merge state ACROSS batches instead of seeing
+    one big batch.
 
-        raw = load_table(spark, sf_dir, "events").withColumn(
-            "ts", epoch_us("ts")
-        )
-        raw.repartitionByRange(_MULTI_FILES, "ts").write.mode("overwrite").parquet(src)
-        # The file source replays files in MODIFICATION-TIME order, and
-        # one write job stamps every part file with the same mtime - so
-        # batch order would be arbitrary, turning chronologically-early
-        # files into late data the watermark silently drops (observed:
-        # lost stream-stream join matches). Stamp ascending mtimes in
-        # min(ts) order so replay is genuinely chronological.
-        import glob
+    The file source replays files in MODIFICATION-TIME order, and one
+    write job stamps every part file with the same mtime - so batch
+    order would be arbitrary, turning early files into late data the
+    watermark silently drops (observed: lost stream-stream join
+    matches). Ascending mtimes are stamped in min(key) order so replay
+    follows the key."""
+    import glob
 
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        parts = glob.glob(os.path.join(src, "part-*.parquet"))
+    out = scratch_dir(qid, sf_dir)
 
-        def min_ts(path: str) -> int:
+    def build() -> None:
+        df = frame(spark, sf_dir)
+        df.repartitionByRange(n_files, key).write.parquet(out)
+        if sentinel is not None:
+            sentinel(df, out)
+
+        def lo(path: str) -> int:
             md = pq.read_metadata(path)
-            idx = md.schema.names.index("ts")
+            idx = md.schema.names.index(key)
             return min(
                 md.row_group(g).column(idx).statistics.min
                 for g in range(md.num_row_groups)
             )
 
+        parts = glob.glob(os.path.join(out, "part-*.parquet"))
         base = int(os.path.getmtime(parts[0]))
-        for k, p in enumerate(sorted(parts, key=min_ts)):
+        for k, p in enumerate(sorted(parts, key=lo)):
             os.utime(p, (base + k, base + k))
-        os.makedirs(os.path.join(src, "_done"), exist_ok=True)
-    return src
+
+    return build_once(out, sf_dir, build, frame, sentinel, key, n_files)
+
+
+def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events through the batch loader with ts stored as raw epoch-µs
+    longs: the replay read is one forced-long schema + magnitude branch
+    regardless of how the source dir encoded its timestamps (testdata
+    int64-ns vs Spark INT96)."""
+    return load_table(spark, sf_dir, "events").withColumn("ts", epoch_us("ts"))
+
+
+def _events_multifile_src(spark: SparkSession, sf_dir: str) -> str:
+    """events as _MULTI_FILES chronological replay files."""
+    return _replay_src(spark, sf_dir, "events_multifile", _events_us, "ts")
 
 
 def _events_stream_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,43 +152,14 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(sch).parquet(f"{sf_dir}/documents.parque[t]")
 
 
-def _docs_multifile_src(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize documents as _MULTI_FILES doc_id-range parquet files
-    with ascending mtimes (the file source replays in mtime order) so
-    a maxFilesPerTrigger=1 stream sees a deterministic multi-batch
-    arrival — the corpus analogue of _events_multifile_src."""
-    src = scratch_dir("docs_multifile", sf_dir)
-    if not os.path.isdir(os.path.join(src, "_done")):
-        ensure_session_confs(spark)
-        docs = load_table(spark, sf_dir, "documents")
-        docs.repartitionByRange(_MULTI_FILES, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(src)
-        import glob
-
-        import pyarrow.parquet as pq
-
-        parts = glob.glob(os.path.join(src, "part-*.parquet"))
-
-        def min_id(path: str) -> int:
-            md = pq.read_metadata(path)
-            idx = md.schema.names.index("doc_id")
-            return min(
-                md.row_group(g).column(idx).statistics.min
-                for g in range(md.num_row_groups)
-            )
-
-        base = int(os.path.getmtime(parts[0]))
-        for k, p in enumerate(sorted(parts, key=min_id)):
-            os.utime(p, (base + k, base + k))
-        os.makedirs(os.path.join(src, "_done"), exist_ok=True)
-    return src
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents")
 
 
 def _docs_stream_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of documents arriving over _MULTI_FILES
     micro-batches (maxFilesPerTrigger=1 under availableNow)."""
-    src = _docs_multifile_src(spark, sf_dir)
+    src = _replay_src(spark, sf_dir, "docs_multifile", _documents, "doc_id")
     sch = load_table(spark, sf_dir, "documents").schema
     return (
         spark.readStream.schema(sch)
@@ -1064,49 +1055,13 @@ _CDC_LOG_SCHEMA = T.StructType(
 
 
 def _cdc_multifile_src(spark: SparkSession, sf_dir: str) -> str:
-    """The batch CDC log (operators.merge._cdc_log) laid out as
-    _CDC_FILES seq-range parquet files with ascending mtimes, so a
-    maxFilesPerTrigger=1 replay delivers strictly increasing seq
-    ranges — later micro-batches always hold higher seqs, which is
-    what makes per-batch last-writer-wins compose into the global
-    last-writer-wins the oracle computes."""
-    import hashlib
-    import inspect
-
+    """The batch CDC log (operators.merge._cdc_log) replayed as
+    _CDC_FILES seq-range files: later micro-batches always hold higher
+    seqs, which is what makes per-batch last-writer-wins compose into
+    the global last-writer-wins the oracle computes."""
     from ..operators.merge import _cdc_log
 
-    src = scratch_dir("cdc_multifile", sf_dir)
-    # Marker is fingerprinted on the log derivation's source: if
-    # operators.merge._cdc_log ever changes, the cached layout is
-    # invalidated instead of silently feeding stale files while the
-    # oracle reflects the new derivation.
-    fp = hashlib.md5(inspect.getsource(_cdc_log).encode()).hexdigest()[:12]
-    marker = os.path.join(src, f"_done-{fp}")
-    if not os.path.isdir(marker):
-        import shutil
-
-        shutil.rmtree(src, ignore_errors=True)
-        log = _cdc_log(spark, sf_dir)
-        log.repartitionByRange(_CDC_FILES, "seq").write.mode("overwrite").parquet(src)
-        import glob
-
-        import pyarrow.parquet as pq
-
-        parts = glob.glob(os.path.join(src, "part-*.parquet"))
-
-        def min_seq(path: str) -> int:
-            md = pq.read_metadata(path)
-            idx = md.schema.names.index("seq")
-            return min(
-                md.row_group(g).column(idx).statistics.min
-                for g in range(md.num_row_groups)
-            )
-
-        base = int(os.path.getmtime(parts[0]))
-        for k, p in enumerate(sorted(parts, key=min_seq)):
-            os.utime(p, (base + k, base + k))
-        os.makedirs(marker, exist_ok=True)
-    return src
+    return _replay_src(spark, sf_dir, "cdc_multifile", _cdc_log, "seq", _CDC_FILES)
 
 
 def _run_stream_cdc(spark: SparkSession, sf_dir: str, qid: str, multi: bool) -> DataFrame:
@@ -1827,52 +1782,25 @@ ORACLE["stream_scd2_apply"] = _STREAM_SCD2_SQL
 # from the sink read; the oracle is the plain batch LEFT JOIN.
 
 
-def _events_outer_src(spark: SparkSession, sf_dir: str) -> str:
-    """events as _MULTI_FILES chronological parquet files PLUS a final
-    sentinel file (one view + one purchase, user_id = -1, ts = max(ts)
-    + 2h) whose only job is to advance both sides' watermarks past all
-    real join windows. Ascending mtimes keep replay chronological with
-    the sentinel last (same invariant as _events_multifile_src)."""
-    import glob
-
+def _outer_sentinel(df: DataFrame, out: str) -> None:
+    """One view + one purchase (user_id = -1, ts = max(ts) + 2h) whose
+    only job is to advance both sides' watermarks past all real join
+    windows; its min(ts) sorts it last in the replay."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    src = scratch_dir("events_outer_src", sf_dir)
-    if not os.path.isdir(os.path.join(src, "_done")):
-        ensure_session_confs(spark)
-        from ..compat import epoch_us
-
-        raw = load_table(spark, sf_dir, "events").withColumn("ts", epoch_us("ts"))
-        raw.repartitionByRange(_MULTI_FILES, "ts").write.mode("overwrite").parquet(src)
-        max_us = raw.agg(F.max("ts")).collect()[0][0]
-        sentinel = pa.table(
-            {
-                "event_id": pa.array([-1, -2], pa.int64()),
-                "ts": pa.array([max_us + 7_200_000_000] * 2, pa.int64()),
-                "user_id": pa.array([-1, -1], pa.int64()),
-                "event_type": pa.array(["view", "purchase"]),
-                "value": pa.array([0.0, 0.0], pa.float64()),
-                "props": pa.array(["", ""]),
-            }
-        )
-        pq.write_table(sentinel, os.path.join(src, "part-zz-sentinel.parquet"))
-
-        parts = glob.glob(os.path.join(src, "part-*.parquet"))
-
-        def min_ts(path: str) -> int:
-            md = pq.read_metadata(path)
-            idx = md.schema.names.index("ts")
-            return min(
-                md.row_group(g).column(idx).statistics.min
-                for g in range(md.num_row_groups)
-            )
-
-        base = int(os.path.getmtime(parts[0]))
-        for k, p in enumerate(sorted(parts, key=min_ts)):
-            os.utime(p, (base + k, base + k))
-        os.makedirs(os.path.join(src, "_done"), exist_ok=True)
-    return src
+    max_us = df.agg(F.max("ts")).collect()[0][0]
+    sentinel = pa.table(
+        {
+            "event_id": pa.array([-1, -2], pa.int64()),
+            "ts": pa.array([max_us + 7_200_000_000] * 2, pa.int64()),
+            "user_id": pa.array([-1, -1], pa.int64()),
+            "event_type": pa.array(["view", "purchase"]),
+            "value": pa.array([0.0, 0.0], pa.float64()),
+            "props": pa.array(["", ""]),
+        }
+    )
+    pq.write_table(sentinel, os.path.join(out, "part-zz-sentinel.parquet"))
 
 
 def _run_stream_stream_outer(
@@ -1882,7 +1810,9 @@ def _run_stream_stream_outer(
     min_batches: int,
     join_type: str = "left_outer",
 ) -> DataFrame:
-    src = _events_outer_src(spark, sf_dir)
+    src = _replay_src(
+        spark, sf_dir, "events_outer_src", _events_us, "ts", sentinel=_outer_sentinel
+    )
 
     def stream() -> DataFrame:
         r = spark.readStream.schema(_EVENTS_RAW_SCHEMA)

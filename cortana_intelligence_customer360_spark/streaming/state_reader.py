@@ -31,7 +31,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.scans import scratch_dir
+from ..sources.derived import scratch_dir
 from ..sources.tables import load_table
 from .ops import _MULTI_FILES, _STATE_PARTITIONS, _events_multifile_src, _SEQ
 

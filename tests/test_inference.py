@@ -1004,10 +1004,8 @@ def test_python_sink_writes_every_partition(spark, sf_dir):
     import glob
     import os
 
-    from cortana_intelligence_customer360_spark.operators.scans import (
-        scratch_dir,
-        sink_python_datasource,
-    )
+    from cortana_intelligence_customer360_spark.operators.scans import sink_python_datasource
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
 
     rows = sink_python_datasource(spark, sf_dir).collect()
     out = scratch_dir("sink_python_datasource", sf_dir)

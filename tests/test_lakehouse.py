@@ -176,9 +176,10 @@ def test_write_audit_publish_blocks_bad_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from cortana_intelligence_customer360_spark.sources import lakehouse as lh
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
     from cortana_intelligence_customer360_spark.sources.tables import load_table
 
-    root = lh._scratch("test_wap", sf_dir)
+    root = scratch_dir("test_wap", sf_dir)
     import os
     import shutil
 

@@ -23,7 +23,7 @@ import pytest
 from cortana_intelligence_customer360_spark.operators.aggregates import (
     agg_regr_family,
 )
-from cortana_intelligence_customer360_spark.operators.scans import scratch_dir
+from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
 from cortana_intelligence_customer360_spark.plans.asserts import plan_string
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -79,17 +79,15 @@ def test_lake_vacuum_contract(spark, sf_dir):
     that an actual time-travel READ past the horizon now raises."""
     import pytest as _pytest
 
-    from cortana_intelligence_customer360_spark.sources.lakehouse import (
-        ManifestTable,
-        _scratch,
-    )
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
+    from cortana_intelligence_customer360_spark.sources.lakehouse import ManifestTable
 
     out = lake_vacuum(spark, sf_dir).collect()
     assert out
     assert all(r.files_removed_some and r.old_unreadable for r in out)
     orders = load_table(spark, sf_dir, "orders")
     assert sum(r.n_orders for r in out) == orders.count()
-    t = ManifestTable(_scratch("lake_vacuum", sf_dir))
+    t = ManifestTable(scratch_dir("lake_vacuum", sf_dir))
     with _pytest.raises(Exception):
         t.read(spark, version=0).count()
 

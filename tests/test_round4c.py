@@ -206,7 +206,7 @@ def test_schema_evolution_time_travel(spark, sf_dir):
     import os
     import shutil
 
-    from cortana_intelligence_customer360_spark.operators.scans import scratch_dir
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
     from cortana_intelligence_customer360_spark.sources.lakehouse import ManifestTable
 
     root = scratch_dir("test_schema_evo", sf_dir)

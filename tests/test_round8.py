@@ -395,16 +395,16 @@ def test_shallow_clone_divergence_is_isolated(spark):
     and the clone's v0 must reference only source-owned files."""
     import os as _os
 
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
     from cortana_intelligence_customer360_spark.sources.lakehouse import (
         _build_orders_table,
-        _scratch,
         shallow_clone,
     )
     from cortana_intelligence_customer360_spark.sources.tables import load_table
 
     src = _build_orders_table(spark, SF_DIR, "t_clone_iso_src")
     before = src.read(spark).count()
-    clone = shallow_clone(src, _scratch("t_clone_iso_dst", SF_DIR))
+    clone = shallow_clone(src, scratch_dir("t_clone_iso_dst", SF_DIR))
     assert clone.read(spark).count() == before  # clone sees the snapshot
     v0_files = clone.manifest(0)["files"]
     srcroot = _os.path.normpath(src.root)

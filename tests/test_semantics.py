@@ -574,6 +574,7 @@ def test_binary_files_roundtrip_bytes(spark, sf_dir):
     """The binaryFile re-read must agree with a direct recomputation
     from the source table (md5 over text + trailing newline)."""
     from cortana_intelligence_customer360_spark.operators import scans
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
 
     got = scans.scan_binary_files(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").where(F.col("source") == "src0")
@@ -857,13 +858,14 @@ def test_compaction_produces_few_files_and_keeps_rows(spark, sf_dir):
     import os
 
     from cortana_intelligence_customer360_spark.operators import scans
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
 
     out = scans.maint_compact_small_files(spark, sf_dir)
     total = sum(r["n_rows"] for r in out.collect())
     src_rows = load_table(spark, sf_dir, "events").count()
     assert total == src_rows
-    frag = scans.scratch_dir("maint_frag_events", sf_dir)
-    comp = scans.scratch_dir("maint_compact_events", sf_dir)
+    frag = scratch_dir("maint_frag_events", sf_dir)
+    comp = scratch_dir("maint_compact_events", sf_dir)
     n_small = len(glob.glob(os.path.join(frag, "part-*.parquet")))
     n_comp = len(glob.glob(os.path.join(comp, "shard=*", "part-*.parquet")))
     assert n_small == 32

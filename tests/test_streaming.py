@@ -210,7 +210,7 @@ def test_stream_cdc_apply_versions_and_time_travel(spark, sf_dir):
     """Every CDC micro-batch must land as its own snapshot-isolated
     table version (v0 = the base load), and v0 must still read as the
     untouched customer base after all four batches applied."""
-    from cortana_intelligence_customer360_spark.operators.scans import scratch_dir
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
     from cortana_intelligence_customer360_spark.sources.lakehouse import ManifestTable
     from cortana_intelligence_customer360_spark.streaming import ops
 
@@ -350,7 +350,7 @@ def test_stream_transform_timers_semantics(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from cortana_intelligence_customer360_spark.operators.scans import scratch_dir
+    from cortana_intelligence_customer360_spark.sources.derived import scratch_dir
     from cortana_intelligence_customer360_spark.sources.tables import load_table
     from cortana_intelligence_customer360_spark.streaming.typed_state import (
         _TIMER_DELAY_MS,
