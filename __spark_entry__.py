@@ -24,13 +24,14 @@ from cortana_intelligence_customer360_spark import registry  # noqa: E402
 from cortana_intelligence_customer360_spark.features.core import (  # noqa: E402
     feat_profile_join,
 )
+from cortana_intelligence_customer360_spark.session import as_op  # noqa: E402
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship Customer-360 wide-profile query on sf0.001 (rows>0)."""
-    return feat_profile_join(spark, _SMOKE_SF_DIR)
+    return as_op(feat_profile_join)(spark, _SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

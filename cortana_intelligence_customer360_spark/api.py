@@ -23,15 +23,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import registry
 from .features.core import feat_profile_join
-from .session import get_spark  # noqa: F401  (re-export)
-from .sources.tables import TABLES, ensure_session_confs, load_table
+from .session import as_op, get_spark, provision  # noqa: F401  (get_spark: re-export)
+from .sources.tables import TABLES, load_table
 
 
 def open_catalog(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str]:
     """Register every catalog table as a temp view named
     ``{prefix}{table}`` and return the view names. After this, the
     entire engine surface is plain ``spark.sql``."""
-    ensure_session_confs(spark)
+    provision(spark)
     names = []
     for t in TABLES:
         name = f"{prefix}{t}"
@@ -43,7 +43,7 @@ def open_catalog(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str
 def customer_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship enriched Customer-360 profile (one wide row per
     customer) - the table the reference served to Power BI."""
-    return feat_profile_join(spark, sf_dir)
+    return as_op(feat_profile_join)(spark, sf_dir)
 
 
 def run(query_id: str, spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,7 +77,7 @@ def attribution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     marketer-facing conversion-credit table (features/attribution.py)."""
     from .features.attribution import feat_attribution_touch
 
-    return feat_attribution_touch(spark, sf_dir)
+    return as_op(feat_attribution_touch)(spark, sf_dir)
 
 
 # Corpus-size threshold where exact brute-force top-k stops being the

@@ -87,7 +87,7 @@ def epoch_us(col: str | Column) -> Column:
 
     Parquet ms timestamps surface as TIMESTAMP_NTZ in Spark 4; the cast
     to (LTZ) timestamp interprets the wall-clock in the session TZ,
-    which sources.tables.ensure_session_confs pins to UTC - the same
+    which session.provision pins to UTC for every op - the same
     interpretation DuckDB's epoch_us gives naive timestamps."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp")).cast("long")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..compat import bcount, epoch_us
+from ..session import session_conf
 from ..sources.tables import load_table
 
 
@@ -1270,10 +1271,10 @@ def sql_scripting_while(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-matched. Scripting state lives in session variables — zero
     client-side splicing; the per-status aggregate is the only
     distributed work (one exchange, DECIMAL-exact sums)."""
-    prev_conf = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_scr")
-    try:
+    # The script is parsed and run inside spark.sql(), so the flag can
+    # be restored before the caller collects.
+    with session_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
 BEGIN
@@ -1304,14 +1305,6 @@ BEGIN
 END
 """
         )
-    finally:
-        # Script parse + execution happen inside the spark.sql() call
-        # (pinned by test_scripting_conf_restored_before_collect), so
-        # restoring here is safe. This op was the one remaining setter
-        # WITHOUT a restore (r8-ADVICE class) — found in round 10 when
-        # the restore test read "true" at a point in the full suite
-        # where only this op could have leaked it.
-        spark.conf.set("spark.sql.scripting.enabled", prev_conf)
 
 
 _SQL_SCRIPTING_SQL = """

@@ -146,15 +146,11 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pos, token in enumerate(row["text"].split(" ")):
                 yield row["doc_id"], pos, token
 
-    from ..operators.aggregates import _temp_view
-    from ..sources.tables import ensure_session_confs
-
-    ensure_session_confs(spark)
     spark.udtf.register("c360_split_tokens", SplitTokens)
-    view = _temp_view(load_table(spark, sf_dir, "documents"), "c360_docs_for_udtf")
     return spark.sql(
         "SELECT s.doc_id, s.pos, s.token "
-        f"FROM c360_split_tokens(TABLE(SELECT doc_id, text FROM {view})) s"
+        "FROM c360_split_tokens(TABLE(SELECT doc_id, text FROM {docs})) s",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -203,16 +199,12 @@ def udtf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self.user is not None:
                 yield self.user, self.n, self.best_len, self.best_type
 
-    from ..operators.aggregates import _temp_view
-    from ..sources.tables import ensure_session_confs
-
-    ensure_session_confs(spark)
     spark.udtf.register("c360_longest_streak", LongestStreak)
-    view = _temp_view(load_table(spark, sf_dir, "events"), "c360_ev_for_udtf")
     return spark.sql(
         "SELECT s.user_id, s.n_events, s.longest_streak, s.streak_type "
-        f"FROM c360_longest_streak(TABLE(SELECT user_id, ts, event_id, event_type "
-        f"FROM {view}) PARTITION BY user_id ORDER BY (ts, event_id)) s"
+        "FROM c360_longest_streak(TABLE(SELECT user_id, ts, event_id, event_type "
+        "FROM {ev}) PARTITION BY user_id ORDER BY (ts, event_id)) s",
+        ev=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -462,17 +454,13 @@ def udtf_analyze_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
             vals = [row[i] for i in range(1, len(row))]
             yield (row[0], *[None if v is None else float(v) * 2.0 for v in vals])
 
-    from ..operators.aggregates import _temp_view
-    from ..sources.tables import ensure_session_confs
-
-    ensure_session_confs(spark)
     DoubleNumerics = udtf(DoubleNumerics)
     spark.udtf.register("c360_double_numerics", DoubleNumerics)
-    view = _temp_view(load_table(spark, sf_dir, "customer"), "c360_cust_for_udtf")
     return spark.sql(
         "SELECT s.key, s.c_acctbal_x2, s.c_nationkey_x2 "
-        f"FROM c360_double_numerics(TABLE(SELECT c_custkey, c_acctbal, "
-        f"c_nationkey FROM {view})) s"
+        "FROM c360_double_numerics(TABLE(SELECT c_custkey, c_acctbal, "
+        "c_nationkey FROM {cust})) s",
+        cust=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -494,10 +482,6 @@ def udf_sql_declared(spark: SparkSession, sf_dir: str) -> DataFrame:
     time and runs inside whole-stage codegen, unlike every Python UDF
     in this module. A price-band classifier and a tax-inclusive amount,
     declared in SQL and used from a query over lineitem."""
-    from ..operators.aggregates import _temp_view
-    from ..sources.tables import ensure_session_confs
-
-    ensure_session_confs(spark)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION c360_price_band(x DOUBLE) "
         "RETURNS STRING RETURN CASE WHEN x >= 40000 THEN 'high' "
@@ -507,16 +491,16 @@ def udf_sql_declared(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CREATE OR REPLACE TEMPORARY FUNCTION c360_with_tax(p DOUBLE, t DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1.0 + t)"
     )
-    view = _temp_view(load_table(spark, sf_dir, "lineitem"), "c360_li_for_sqludf")
     return spark.sql(
-        f"""
+        """
         SELECT c360_price_band(l_extendedprice) AS band,
                CAST(COUNT(*) AS BIGINT) AS n_items,
                CAST(SUM(CAST(c360_with_tax(l_extendedprice, l_tax)
                              AS DECIMAL(30,6))) AS DOUBLE) AS taxed_total
-        FROM {view}
+        FROM {li}
         GROUP BY 1
-        """
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -17,8 +17,6 @@ browsing-count matrix shape on the local events table.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -230,34 +228,20 @@ FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
 """
 
 
-_VIEW_SEQ = itertools.count(1)
-
-
-def _temp_view(df: DataFrame, base: str) -> str:
-    """Register a uniquely-named temp view (re-entrant / thread-safe
-    under a parallel driver: a single next() on itertools.count is
-    atomic under CPython, unlike a read-modify-write on a list cell)."""
-    name = f"{base}_{next(_VIEW_SEQ)}"
-    df.createOrReplaceTempView(name)
-    return name
-
-
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS ((segment), (nation), ()) over customer."""
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
-    view = _temp_view(
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey),
-        "c360_cust_nation",
-    )
+    # {{cn}} leaves the f-string as {cn}, which spark.sql fills with the frame.
     return spark.sql(
         f"""
         SELECT c_mktsegment, n_name,
                CAST(COUNT(*) AS BIGINT) AS n_customers,
                {davg_sql('c_acctbal')} AS avg_bal
-        FROM {view}
+        FROM {{cn}}
         GROUP BY GROUPING SETS ((c_mktsegment), (n_name), ())
-        """
+        """,
+        cn=cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey),
     )
 
 

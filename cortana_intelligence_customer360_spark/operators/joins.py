@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..compat import bcount, dsum, dsum_sql, epoch_us
+from ..session import session_conf
 from ..sources.derived import build_once, scratch_dir
 from ..sources.tables import load_table
 
@@ -665,19 +666,17 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k produces — asserting the two forms agree is the point: the
     lateral FORM must not change the answer (win_topk_per_group is the
     window twin). Tie-broken by o_orderkey (compat rule 7)."""
-    from .aggregates import _temp_view
-
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    cv = _temp_view(cust, "lat_cust")
-    ov = _temp_view(orders, "lat_orders")
-    return spark.sql(f"""
+    return spark.sql(
+        """
         SELECT c.c_custkey, c.c_name, t.o_orderkey, t.o_totalprice
-        FROM {cv} c,
-        LATERAL (SELECT o_orderkey, o_totalprice FROM {ov} o
+        FROM {cust} c,
+        LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
                  WHERE o.o_custkey = c.c_custkey
                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-    """)
+        """,
+        cust=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _LATERAL_SQL = """
@@ -847,27 +846,6 @@ FROM l JOIN r ON l.code IS NOT DISTINCT FROM r.rcode
 # -- runtime-filtered and AQE-skew-handled joins ----------------------------
 
 
-def _conf_scope(spark: SparkSession, confs: dict, fn):
-    """Run ``fn`` (which must EXECUTE its plan — confs are read at
-    action time, not DataFrame-build time) under temporary session
-    confs, restoring previous values after."""
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        return fn()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 BLOOM_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -909,9 +887,8 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     conf scope because runtime filters are planned at action time."""
     out = scratch_dir("join_bloom_runtime", sf_dir)
     df = bloom_star_join(spark, sf_dir)
-    _conf_scope(
-        spark, BLOOM_CONFS, lambda: df.write.mode("overwrite").parquet(out)
-    )
+    with session_conf(spark, BLOOM_CONFS):
+        df.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
 
@@ -1027,11 +1004,8 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch inside the conf scope — AQE decides splits at runtime."""
     out = scratch_dir("join_skew_aqe", sf_dir)
     df = aqe_skew_join(spark, sf_dir)
-    _conf_scope(
-        spark,
-        skew_confs(sf_dir),
-        lambda: df.write.mode("overwrite").parquet(out),
-    )
+    with session_conf(spark, skew_confs(sf_dir)):
+        df.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..compat import bcount, dsum, dsum_sql, epoch_us
+from ..session import detach_view, session_conf
 from ..sources.derived import build_once, scratch_dir
 from ..sources.tables import TABLE_SCHEMAS, load_table
 
@@ -250,9 +251,6 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow pass, counts per event_type into a memory sink.
     Deterministic, so it still carries a full oracle - streaming and
     batch must agree."""
-    from ..sources.tables import ensure_session_confs
-
-    ensure_session_confs(spark)
     sink = f"c360_stream_src_{next(_STREAM_SEQ)}"
     stream = (
         # Glob pattern: the streaming file source requires a directory
@@ -270,7 +268,7 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(sink)
+    return detach_view(spark, sink)
 
 
 _STREAM_SOURCE_SQL = """
@@ -468,10 +466,10 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _time.sleep(0.3)
     q.stop()
     q.awaitTermination(30)
+    got = detach_view(spark, name)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     if n_batches < 2:
         raise AssertionError(f"expected >= 2 micro-batches, got {n_batches}")
-    got = spark.table(name)
     return got.groupBy("bucket").agg(
         bcount().alias("n"), F.sum("id").cast("long").alias("sum_id")
     )
@@ -1218,10 +1216,7 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     on post-filter correctness alone. This is the custom-connector
     scan-reduction contract at 100 TB: predicates cut generated/
     fetched rows at the source, not after transfer."""
-    key = "spark.sql.python.filterPushdown.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    with session_conf(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         try:
             spark.dataSource.register(_make_pushdown_source())
         except Exception:
@@ -1235,15 +1230,9 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Eager localCheckpoint: pushFilters runs at physical planning,
         # so the plan must execute while the conf is set — later
         # materializations replay the checkpointed 1-row result, not
-        # the plan. This lets the finally restore the session conf
-        # (save/restore discipline, matching _run_tws) instead of
-        # leaking the setting into every subsequent query.
+        # the plan. This lets the scope restore the session conf
+        # instead of leaking the setting into every subsequent query.
         return res.localCheckpoint()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 _PYDS_PUSH_SQL = f"""

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compat import dsum_sql
+from ..session import session_conf
 from ..sources.tables import load_table
 
 QUERIES: dict = {}
@@ -86,10 +87,10 @@ def sql_scripting_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     on identically-rounded seeds; exactly one generated row satisfies
     ``bal >= target`` (generation stops there), and its index equals
     the REPEAT body's execution count."""
-    prev_conf = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("rep_orders")
-    try:
+    # The script is parsed and run inside spark.sql(), so the flag can
+    # be restored before the caller collects.
+    with session_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
 BEGIN
@@ -112,12 +113,6 @@ BEGIN
 END
 """
         )
-    finally:
-        # Scripting is parsed (and the script body executed) inside the
-        # spark.sql() call above, so restoring here is safe — and stops
-        # the flag leaking into every later op in the session (ADVICE r8;
-        # mirrors ts_ses_grid's cteRecursionLevelLimit handling).
-        spark.conf.set("spark.sql.scripting.enabled", prev_conf)
 
 
 _REPEAT_SQL = f"""
@@ -155,10 +150,10 @@ def sql_scripting_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: recursive CTE over the ordered year list applying the
     identical two-level rounding."""
-    prev_conf = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("for_orders")
-    try:
+    # The script is parsed and run inside spark.sql(), so the flag can
+    # be restored before the caller collects.
+    with session_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
 BEGIN
@@ -182,10 +177,6 @@ BEGIN
 END
 """
         )
-    finally:
-        # See sql_scripting_repeat: parse + script execution happen in
-        # the spark.sql() call; restore so the flag doesn't leak.
-        spark.conf.set("spark.sql.scripting.enabled", prev_conf)
 
 
 _FOR_SQL = """

@@ -5,6 +5,8 @@ Each operator module exports ``QUERIES`` (query id -> callable taking
 DuckDB SQL string). This module merges them and enforces that ids are
 unique and every oracle key has a matching query (SURVEY.md §2 is the
 normative inventory; R/S-tier operators legitimately omit the oracle).
+Every op is wrapped by ``session.as_op``, so it provisions its session
+once per call (README "Session state").
 """
 
 from __future__ import annotations
@@ -13,6 +15,8 @@ from collections.abc import Callable
 from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import as_op
 
 _MODULES = [
     "cortana_intelligence_customer360_spark.operators.scans",
@@ -66,103 +70,6 @@ _MODULES = [
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Query ids already present in a driver CORRECTNESS_r{N}.json record.
-# The driver's per-round sweep is capped at 50 queries, so ``build()``
-# orders these LAST: each round the 50 ids that make it into the record
-# are ones never driver-recorded before, and the union grows until all
-# registered queries have appeared in at least one round's record. Pure
-# ordering — the set of ids and their semantics are unchanged.
-# r01 ids (CORRECTNESS_r01.json):
-_DRIVER_RECORDED = frozenset({
-    "scan_parquet", "scan_project_pushdown", "scan_csv_roundtrip",
-    "scan_json_roundtrip", "scan_orc_roundtrip", "sink_parquet_partitioned",
-    "source_stream_files", "project_expr", "filter_conjunct",
-    "filter_in_like", "filter_null_safe", "filter_subquery_in",
-    "filter_subquery_corr", "join_inner_equi", "join_left_outer",
-    "join_right_outer", "join_full_outer", "join_semi", "join_anti",
-    "join_broadcast", "join_cross", "join_theta_range", "join_asof",
-    "join_interval", "join_star_multiway", "join_bucketed",
-    "feat_basket_affinity", "agg_pricing_summary", "agg_distinct_count",
-    "agg_approx_distinct", "agg_stats", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "agg_collect_sorted", "agg_pivot", "agg_filtered",
-    "agg_percentiles", "agg_histogram", "win_rank_dense", "win_cume_dist",
-    "win_topk_per_group", "win_lag_lead", "win_running_sum",
-    "win_sliding_range", "win_ntile_percent", "win_first_last",
-    "sort_multikey", "topk_global", "set_union_all",
-    # r02 ids (CORRECTNESS_r02.json):
-    "agg_approx_percentile", "agg_arg_extrema", "agg_bitmap_distinct",
-    "agg_corr_matrix", "agg_mode_per_group", "agg_multi_distinct",
-    "agg_sketch_merge", "agg_time_bucket_rollup", "agg_unpivot",
-    "agg_weighted_median", "agg_window_tvf", "dq_anomaly", "dq_checks",
-    "dq_referential_integrity", "join_asof_nearest", "join_fuzzy_blocked",
-    "join_lateral_topk", "join_nullsafe_equi", "join_range_bucketed",
-    "join_salted_skew", "maint_compact_small_files", "scan_binary_files",
-    "scan_csv_malformed", "scan_partition_pruned", "scan_schema_evolution",
-    "scan_text_lines", "set_except", "set_except_all", "set_intersect",
-    "set_intersect_all", "set_union_distinct", "sink_parquet_zstd",
-    "sort_nulls_ordering", "source_python_datasource", "stat_crosstab",
-    "tpch_q10_returned_items", "tpch_q12_late_lines",
-    "tpch_q14_promo_revenue", "tpch_q15_top_supplier",
-    "tpch_q18_large_volume", "tpch_q19_disjunctive",
-    "tpch_q22_idle_customers", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q4_order_priority",
-    "tpch_q5_local_supplier", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "win_error_burst", "win_nth_value",
-    # r03 ids (CORRECTNESS_r03.json):
-    "cdc_apply_log", "diff_snapshots", "dq_benford", "dq_distribution_drift",
-    "dq_freshness_lag", "dq_outlier_iqr", "dq_profile_summary",
-    "feat_basket_rules", "fn_geohash", "fn_haversine", "graph_bfs_hops",
-    "graph_clustering_coeff", "graph_common_neighbors", "graph_pagerank",
-    "graph_triangle_count", "join_asof_tolerance", "join_spatial_grid",
-    "merge_upsert", "mv_incremental_refresh", "sample_bernoulli_seeded",
-    "sample_hash_pct", "sample_reservoir_per_group", "sample_stratified",
-    "scan_jsonl_nested", "scan_recursive_glob", "scd2_history",
-    "scd2_pointintime_join", "sort_zorder", "source_python_stream",
-    "sql_recursive_cte", "tpcds_yoy_growth", "tpch_q11_important_parts",
-    "tpch_q13_order_distribution", "tpch_q16_supplier_count",
-    "tpch_q17_small_quantity", "tpch_q20_dominant_supplier",
-    "tpch_q21_waiting_supplier", "tpch_q6_forecast_revenue",
-    "tpch_q9_product_profit", "ts_anomaly_mad", "ts_autocorr_lag1",
-    "ts_changepoint_split", "ts_mann_kendall", "ts_next_purchase_eta",
-    "ts_resample_ohlc", "ts_seasonal_decompose", "ts_theil_sen",
-    "win_decline_streak", "win_median_sliding", "win_mom_change",
-    # r04 ids (CORRECTNESS_r04.json):
-    "agg_bloom_custom", "agg_count_min", "agg_grouping_id",
-    "agg_hll_custom", "agg_listagg", "agg_quantile_sketch",
-    "agg_theta_setops", "dq_observe_metrics", "fn_array", "fn_array_sets",
-    "fn_bitwise", "fn_cast_decimal", "fn_collation", "fn_conditional",
-    "fn_date", "fn_datetime_tz", "fn_explode", "fn_higher_order",
-    "fn_json", "fn_levenshtein", "fn_make_datetime", "fn_map", "fn_math",
-    "fn_regexp", "fn_string", "fn_string2", "fn_try_arith", "fn_url",
-    "fn_variant", "fn_xml", "graph_hits", "graph_k_core",
-    "graph_label_prop", "graph_shortest_path_weighted",
-    "join_bloom_runtime", "join_partition_pruning_dynamic",
-    "join_skew_aqe", "merge_full_matrix", "scan_csv_multiline",
-    "sql_parameterized", "sql_pipe_syntax", "sql_session_variables",
-    "ts_backtest_sma", "ts_cusum_drift", "ts_ewma", "ts_gap_fill",
-    "ts_rolling_zscore", "ts_twa", "win_distinct_sliding",
-    "win_pattern_vshape",
-    # r05 ids (CORRECTNESS_r05.json):
-    "scan_metadata_cols", "scan_ignore_corrupt_files",
-    "sink_python_datasource", "agg_skew_kurtosis", "agg_geo_harmonic_means",
-    "agg_session_window_batch", "agg_hopping_window_batch",
-    "agg_interval_concurrency", "agg_price_index", "agg_median_polish",
-    "agg_supplier_hhi_trend", "win_drawdown", "win_reset_running_sum",
-    "win_interval_merge", "agg_skyline_2d", "dq_functional_deps",
-    "dq_duplicate_keys_sample", "dq_psi_drift", "graph_connected_components",
-    "graph_modularity", "graph_random_walk_deepwalk", "graph_adamic_adar",
-    "sample_weighted_ares", "graph_degree_assortativity",
-    "graph_pagerank_personalized", "ts_holt_winters", "ts_fourier_period",
-    "ts_kalman_filter", "ts_acf_profile", "ts_spectral_entropy",
-    "ts_pacf_durbin", "ts_croston", "ts_lead_lag_xcorr",
-    "ts_seasonal_strength", "ts_ljung_box", "ts_residual_mean_reversion",
-    "ts_peak_detection", "ts_theta_method", "ts_forecast_accuracy",
-    "ts_linear_interpolate", "ts_haar_wavelet", "ts_demand_classification",
-    "ts_hampel_outliers", "sql_group_by_all", "fn_luhn", "fn_pseudonymize",
-    "fn_crypto_hash", "fn_binary_codec", "sql_scripting_while",
-    "sql_identifier_dynamic",
-})
-
 
 def build() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
@@ -179,7 +86,7 @@ def build() -> tuple[dict[str, QueryFn], dict[str, str]]:
         for qid, fn in getattr(mod, "QUERIES", {}).items():
             if qid in queries:
                 raise ValueError(f"duplicate query id {qid!r} in {modname}")
-            queries[qid] = fn
+            queries[qid] = as_op(fn)
         for qid, sql in getattr(mod, "ORACLE", {}).items():
             if qid in oracle:
                 raise ValueError(f"duplicate oracle id {qid!r} in {modname}")
@@ -187,6 +94,4 @@ def build() -> tuple[dict[str, QueryFn], dict[str, str]]:
     missing = set(oracle) - set(queries)
     if missing:
         raise ValueError(f"oracle entries without queries: {sorted(missing)}")
-    ordered = {k: v for k, v in queries.items() if k not in _DRIVER_RECORDED}
-    ordered.update((k, v) for k, v in queries.items() if k in _DRIVER_RECORDED)
-    return ordered, oracle
+    return queries, oracle

@@ -133,39 +133,6 @@ MKT_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 LANGS = ["de", "en", "es", "fr", "zh"]
 
 
-def ensure_session_confs(spark: SparkSession) -> None:
-    """Self-provision the runtime confs every query depends on, so the
-    engine behaves identically under ANY caller's SparkSession (the
-    driver builds its own, without our session.py tuning):
-
-    - UTC session timezone: the data is UTC wall-clock; epoch
-      extraction (compat.epoch_us) must not shift by a local offset.
-    - nanosAsLong: lets older Spark 4 runtimes read events.ts (parquet
-      TIMESTAMP_NANOS) as a long; 4.1.2 ignores it (reads ntz) — both
-      shapes are normalized in load_table / raw_ts_to_timestamp.
-    - Arrow: columnar JVM<->Python transfer for pandas UDF operators.
-    """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked down in this deployment; proceed
-    try:
-        # Streaming plans can't use AQE's partition coalescing, so the
-        # stock 200 shuffle partitions means 200 tiny state-store tasks
-        # per micro-batch on a laptop-sized run. Right-size only if the
-        # caller left the default; an explicit setting is respected.
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            cores = spark.sparkContext.defaultParallelism
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(8, min(64, cores * 2))))
-    except Exception:
-        pass
-
-
 # Discriminates epoch-ns from epoch-µs longs: epoch-µs stays below 1e17
 # until year 5138, epoch-ns crosses it in 1973. Needed because Spark
 # runtimes disagree on what a LongType-forced read of a parquet
@@ -198,7 +165,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog: {TABLES}")
-    ensure_session_confs(spark)
     if name == "events":
         # events.ts is parquet INT64 TIMESTAMP(NANOS). Depending on the
         # Spark runtime it surfaces as a raw long (nanosAsLong honored)
@@ -210,7 +176,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if ts_type == "bigint":
             df = df.withColumn("ts", raw_ts_to_timestamp("ts"))
         elif ts_type.startswith("timestamp_ntz"):
-            # Session tz is UTC (ensure_session_confs), so the ntz->ltz
+            # Session tz is UTC (session.provision), so the ntz->ltz
             # cast keeps the UTC wall clock bit-identical.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df.select("event_id", "ts", "user_id", "event_type", "value", "props")

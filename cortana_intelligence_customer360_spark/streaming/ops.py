@@ -30,8 +30,9 @@ from pyspark.sql import types as T
 from ..compat import bcount, dsum, dsum_sql, epoch_us, epoch_us_sql
 from ..operators.scans import _EVENTS_RAW_SCHEMA
 from ..operators.sketches import _hll_sql
+from ..session import detach_view, session_conf
 from ..sources.derived import build_once, scratch_dir
-from ..sources.tables import ensure_session_confs, load_table, raw_ts_to_timestamp
+from ..sources.tables import load_table, raw_ts_to_timestamp
 
 _SEQ = itertools.count(1)  # single next() call is atomic under CPython
 
@@ -60,7 +61,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the events table with the same ts normalization
     as the batch loader (ns long -> µs timestamp); timestamp-physical
     files (blow-up copies) stream through their embedded schema."""
-    ensure_session_confs(spark)
     if not _events_ts_is_int64(sf_dir):
         sch = load_table(spark, sf_dir, "events").schema
         return spark.readStream.schema(sch).parquet(f"{sf_dir}/events.parque[t]")
@@ -147,7 +147,6 @@ def _events_stream_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the documents table (no ts normalization —
     the corpus is not temporal)."""
-    ensure_session_confs(spark)
     sch = load_table(spark, sf_dir, "documents").schema
     return spark.readStream.schema(sch).parquet(f"{sf_dir}/documents.parque[t]")
 
@@ -179,11 +178,22 @@ def _docs_stream_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATE_PARTITIONS = os.environ.get("C360_STREAM_STATE_PARTITIONS", "8")
 
 
+def _state_partitions_conf(spark: SparkSession) -> dict[str, str]:
+    """The drain's shuffle-partition override: shrink to
+    _STATE_PARTITIONS only when the session's value is larger."""
+    try:
+        shrink = int(spark.conf.get("spark.sql.shuffle.partitions")) > int(_STATE_PARTITIONS)
+    except (TypeError, ValueError):
+        shrink = False
+    return {"spark.sql.shuffle.partitions": _STATE_PARTITIONS} if shrink else {}
+
+
 def _drain_to_memory(df: DataFrame, mode: str, min_batches: int = 1) -> DataFrame:
     """Run one availableNow pass into a uniquely-named memory sink and
-    return the sink table. ``min_batches`` asserts the run really was
-    incremental (multi-batch forms must not silently collapse into a
-    single batch, or they'd stop exercising cross-batch state merge).
+    return its rows; the sink's catalog entry is dropped.
+    ``min_batches`` asserts the run really was incremental (multi-batch
+    forms must not silently collapse into a single batch, or they'd stop
+    exercising cross-batch state merge).
 
     State-store sizing: a streaming query creates one state store per
     shuffle partition per stateful operator PER BATCH COMMIT, and the
@@ -195,15 +205,8 @@ def _drain_to_memory(df: DataFrame, mode: str, min_batches: int = 1) -> DataFram
     you would size it to cores (state partitioning is exactly how these
     operators scale out) - it is a knob, not a semantic."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"c360_stream_{next(_SEQ)}"
-    try:
-        shrink = int(prev) > int(_STATE_PARTITIONS)
-    except (TypeError, ValueError):
-        shrink = False
-    try:
-        if shrink:
-            spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
+    with session_conf(spark, _state_partitions_conf(spark)):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -212,14 +215,13 @@ def _drain_to_memory(df: DataFrame, mode: str, min_batches: int = 1) -> DataFram
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    sink = detach_view(spark, name)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     if n_batches < min_batches:
         raise AssertionError(
             f"expected >= {min_batches} non-empty micro-batches, got {n_batches}"
         )
-    return df.sparkSession.table(name)
+    return sink
 
 
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -878,10 +880,7 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     query and restored after."""
     _pbshim.ship_to_workers(spark)
     proc = _LatestEventProcessor()
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_CONF):
         ev = _events_stream(spark, sf_dir).select(
             "user_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -895,11 +894,6 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         return _drain_to_memory(out, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def stream_transform_state_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,10 +904,7 @@ def stream_transform_state_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. RocksDB provider pinned as in stream_transform_state."""
     _pbshim.ship_to_workers(spark)
     proc = _LatestEventProcessor()
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_CONF):
         ev = _events_stream_multi(spark, sf_dir).select(
             "user_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -927,11 +918,6 @@ def stream_transform_state_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         updates = _drain_to_memory(out, "update", min_batches=2)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         updates.withColumn("rn", F.row_number().over(w))
@@ -1912,6 +1898,7 @@ ORACLE["stream_stream_outer_multi"] = _STREAM_STREAM_OUTER_SQL
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+_ROCKSDB_CONF = {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}
 
 
 def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1919,10 +1906,7 @@ def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the RocksDB state store provider. The provider class is
     pinned at query start, so it is set before the drain and restored
     after; results must equal stream_tumbling_multi exactly."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_CONF):
         ev = _events_stream_multi(spark, sf_dir)
         agg = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -1935,11 +1919,6 @@ def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
         return _drain_to_memory(out, "complete", min_batches=2)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 QUERIES["stream_stateful_rocksdb"] = stream_stateful_rocksdb
@@ -2292,7 +2271,7 @@ def source_rate_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination(60)
-    sink = spark.table(name).where(F.col("value") < cutoff)
+    sink = detach_view(spark, name).where(F.col("value") < cutoff)
     return sink.agg(
         bcount().alias("n"),
         F.sum("value").cast("long").alias("sum_v"),

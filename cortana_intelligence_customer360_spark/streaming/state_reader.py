@@ -31,19 +31,20 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import detach_view, session_conf
 from ..sources.derived import scratch_dir
 from ..sources.tables import load_table
 from .ops import _MULTI_FILES, _STATE_PARTITIONS, _events_multifile_src, _SEQ
 
 
-def _run_checkpointed(agg: DataFrame, name: str, ck: str) -> int:
+def _run_checkpointed(agg: DataFrame, ck: str) -> tuple[int, DataFrame]:
     """availableNow drain into a memory sink under the given
     checkpoint; returns the number of input rows this RUN processed
-    (the resume proof: a resumed run must see only the new files)."""
+    (the resume proof: a resumed run must see only the new files) and
+    the sink's rows."""
     spark = agg.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
+    name = f"c360_stream_{next(_SEQ)}"
+    with session_conf(spark, {"spark.sql.shuffle.partitions": _STATE_PARTITIONS}):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -53,9 +54,7 @@ def _run_checkpointed(agg: DataFrame, name: str, ck: str) -> int:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sum(int(p["numInputRows"]) for p in q.recentProgress)
+    return sum(int(p["numInputRows"]) for p in q.recentProgress), detach_view(spark, name)
 
 
 _EVENTS_US_SCHEMA = (
@@ -73,7 +72,7 @@ def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck = scratch_dir("scan_state_store_ck", sf_dir)
     raw = spark.readStream.schema(_EVENTS_US_SCHEMA).parquet(src)
     agg = raw.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    _run_checkpointed(agg, f"c360_stream_{next(_SEQ)}", ck)
+    _run_checkpointed(agg, ck)
     state = spark.read.format("statestore").load(ck)
     # The state schema carries the PHYSICAL aggregate name ("count"),
     # not the logical alias — part of what this reader exposes.
@@ -142,12 +141,11 @@ def stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for p in parts[:half]:
         shutil.copy2(os.path.join(src, p), os.path.join(stage, p))
-    n_first = _run_checkpointed(_stream_agg(), f"c360_stream_{next(_SEQ)}", ck)
+    n_first, _ = _run_checkpointed(_stream_agg(), ck)
 
     for p in parts[half:]:
         shutil.copy2(os.path.join(src, p), os.path.join(stage, p))
-    name = f"c360_stream_{next(_SEQ)}"
-    n_second = _run_checkpointed(_stream_agg(), name, ck)
+    n_second, totals = _run_checkpointed(_stream_agg(), ck)
     total = load_table(spark, sf_dir, "events").count()
     # The resume proof: run 2 saw ONLY the late files. If the
     # checkpoint handoff were broken (fresh offsets), run 2 would
@@ -158,7 +156,7 @@ def stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"resume processed {n_second} rows of {total} "
             f"(first run {n_first}) - checkpoint handoff broken"
         )
-    return spark.table(name)
+    return totals
 
 
 _RESTART_SQL = """

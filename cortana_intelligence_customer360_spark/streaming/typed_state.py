@@ -30,9 +30,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.window import Window
 
+from ..session import detach_view, session_conf
 from ..sources.tables import load_table
 from .ops import (
-    _ROCKSDB_PROVIDER,
+    _ROCKSDB_CONF,
     _docs_stream,  # noqa: F401  (kept for symmetry; events used below)
     _drain_to_memory,
     _events_stream,
@@ -210,10 +211,7 @@ def _run_tws(spark, stream, proc, out_schema, *, time_mode="None",
              event_time_col="", min_batches=1, stop_when_drained=False,
              initial_state=None, min_gap_ms=None):
     _pbshim.ship_to_workers(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    with session_conf(spark, _ROCKSDB_CONF):
         out = stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=proc,
             outputStructType=out_schema,
@@ -227,11 +225,6 @@ def _run_tws(spark, stream, proc, out_schema, *, time_mode="None",
                 out, "update", min_batches=min_batches, min_gap_ms=min_gap_ms
             )
         return _drain_to_memory(out, "update", min_batches=min_batches)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _parse_prog_ts(s: str) -> float:
@@ -283,18 +276,11 @@ def _drain_until_empty(
     stop the query at that point."""
     import time as _time
 
-    from .ops import _SEQ, _STATE_PARTITIONS
+    from .ops import _SEQ, _state_partitions_conf
 
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"c360_stream_{next(_SEQ)}"
-    try:
-        shrink = int(prev) > int(_STATE_PARTITIONS)
-    except (TypeError, ValueError):
-        shrink = False
-    try:
-        if shrink:
-            spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
+    with session_conf(spark, _state_partitions_conf(spark)):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -317,15 +303,14 @@ def _drain_until_empty(
                 break
             _time.sleep(0.2)
         q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    sink = detach_view(spark, name)
     if n_batches < min_batches:
         raise AssertionError(
             f"expected >= {min_batches} non-empty micro-batches, got {n_batches}"
         )
     if min_gap_ms is not None:
         _assert_batch_gaps(prog, min_gap_ms)
-    return spark.table(name)
+    return sink
 
 
 def _latest_per(df: DataFrame, keys: list[str], seq_col: str) -> DataFrame:

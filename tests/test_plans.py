@@ -519,16 +519,17 @@ def test_bloom_runtime_filter_in_registered_star_join(spark, sf_dir):
     bloom filter injected into the fact side under its conf scope."""
     from cortana_intelligence_customer360_spark.operators.joins import (
         BLOOM_CONFS,
-        _conf_scope,
         bloom_star_join,
     )
+    from cortana_intelligence_customer360_spark.session import session_conf
 
     def run():
         df = bloom_star_join(spark, sf_dir)
         df.collect()
         return df._jdf.queryExecution().executedPlan().toString()
 
-    plan = _conf_scope(spark, BLOOM_CONFS, run)
+    with session_conf(spark, BLOOM_CONFS):
+        plan = run()
     assert "might_contain" in plan or "bloom_filter_agg" in plan, plan[:2000]
 
 
@@ -540,9 +541,9 @@ def test_aqe_skew_split_fires_on_planted_skew(spark, sf_dir):
     driver oracle)."""
     from cortana_intelligence_customer360_spark.operators.joins import (
         SKEW_CONFS,
-        _conf_scope,
         skewed_fact_dim,
     )
+    from cortana_intelligence_customer360_spark.session import session_conf
 
     def run():
         fact, dim = skewed_fact_dim(spark, sf_dir)
@@ -550,7 +551,8 @@ def test_aqe_skew_split_fires_on_planted_skew(spark, sf_dir):
         j.collect()
         return j._jdf.queryExecution().executedPlan().toString()
 
-    plan = _conf_scope(spark, SKEW_CONFS, run)
+    with session_conf(spark, SKEW_CONFS):
+        plan = run()
     skew_reads = [
         l for l in plan.splitlines()
         if "AQEShuffleRead" in l and "skewed" in l

@@ -189,7 +189,6 @@ def main() -> None:
 
     def load_patched(spark, sf_dir, name):
         if sf_dir == OUT:
-            tables.ensure_session_confs(spark)
             return spark.read.parquet(f"{sf_dir}/{name}.parquet")
         return orig(spark, sf_dir, name)
 
