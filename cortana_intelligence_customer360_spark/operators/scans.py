@@ -15,7 +15,6 @@ through ``build_once`` and rebuilt when the inputs change.
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..compat import bcount, dsum, dsum_sql, epoch_us
-from ..session import detach_view, session_conf
+from ..session import drain, session_conf
 from ..sources.derived import build_once, scratch_dir
 from ..sources.tables import TABLE_SCHEMAS, load_table
 
@@ -229,8 +228,6 @@ SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
 FROM orders GROUP BY 1
 """
 
-_STREAM_SEQ = itertools.count(1)  # next() is atomic under CPython
-
 # events.ts on disk is INT64 ns (see sources/tables.py); the stream
 # source reads the raw physical schema.
 _EVENTS_RAW_SCHEMA = T.StructType(
@@ -251,7 +248,6 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow pass, counts per event_type into a memory sink.
     Deterministic, so it still carries a full oracle - streaming and
     batch must agree."""
-    sink = f"c360_stream_src_{next(_STREAM_SEQ)}"
     stream = (
         # Glob pattern: the streaming file source requires a directory
         # or glob (basePath), not a bare file path.
@@ -260,15 +256,7 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(bcount().alias("n_events"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return detach_view(spark, sink)
+    return drain(stream, mode="complete")[0]
 
 
 _STREAM_SOURCE_SQL = """
@@ -443,33 +431,17 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     row budget arrives, asserting the data really crossed >= 2
     micro-batch commits. Aggregated through the ordinary Catalyst
     pipeline; the oracle reproduces the synthetic rows in closed form."""
-    import time as _time
-
     try:
         spark.dataSource.register(_make_synth_stream_source())
     except Exception:
         pass  # already registered this session
-    name = f"c360_pystream_{next(_STREAM_SEQ)}"
-    df = spark.readStream.format("c360_synth_stream").load()
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
     want = _PYSTREAM_BATCHES * _PYSTREAM_ROWS
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        if spark.table(name).count() >= want:
-            break
-        _time.sleep(0.3)
-    q.stop()
-    q.awaitTermination(30)
-    got = detach_view(spark, name)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    if n_batches < 2:
-        raise AssertionError(f"expected >= 2 micro-batches, got {n_batches}")
+    got, _ = drain(
+        spark.readStream.format("c360_synth_stream").load(),
+        trigger={"processingTime": "0 seconds"},
+        until=lambda progress: sum(p["numInputRows"] for p in progress) >= want,
+        min_batches=2,
+    )
     return got.groupBy("bucket").agg(
         bcount().alias("n"), F.sum("id").cast("long").alias("sum_id")
     )
@@ -1333,8 +1305,8 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python Data Source STREAMING writer (DataSourceStreamWriter —
     the streaming sibling of sink_python_datasource's batch writer,
     the last uncovered side of the Spark-4 Python connector API): the
-    4-batch chronological events replay is written through
-    ``writeStream.format(...)`` with per-partition write() returning
+    4-batch chronological events replay is written through a
+    ``format(...)`` stream sink with per-partition write() returning
     commit messages and a driver-side commit(batchId) publishing an
     epoch manifest — the exactly-once publish hook. The written rows
     are read back and aggregated; a dropped or double-written epoch
@@ -1349,9 +1321,7 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ops import _events_stream_multi
 
     out = scratch_dir("sink_python_stream_writer", sf_dir)
-    ckpt = scratch_dir("sink_python_stream_writer_ckpt", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     try:
         spark.dataSource.register(_make_jsonl_stream_sink())
     except Exception:
@@ -1361,14 +1331,7 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "user_id",
     )
-    q = (
-        ev.writeStream.format("c360_jsonl_stream_sink")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, lambda w: w.format("c360_jsonl_stream_sink").option("path", out))
     commits = []
     for p in glob.glob(os.path.join(out, "_commit_*.json")):
         with open(p) as fh:

@@ -37,8 +37,9 @@ from pyspark.sql.window import Window
 
 from ..compat import bcount
 from ..llmops.text import _HEAVY_HITTERS_SQL, _HH_INV_PHI, _HH_K
+from ..session import drain
 from ..sources.tables import load_table
-from .ops import _docs_stream, _docs_stream_multi, _drain_to_memory
+from .ops import _docs_stream, _docs_stream_multi
 
 _HH_GROUPS = 8
 
@@ -100,7 +101,7 @@ def _stream_candidates(word_stream: DataFrame, min_batches: int) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = _drain_to_memory(updates, "update", min_batches=min_batches)
+    sink = drain(updates, mode="update", min_batches=min_batches)[0]
     return (
         sink.withColumn("mx", F.max("seq").over(Window.partitionBy("grp")))
         .where(F.col("seq") == F.col("mx"))

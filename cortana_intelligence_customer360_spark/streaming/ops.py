@@ -10,6 +10,12 @@ watermark/late-data operator is S-tier: its result depends on
 micro-batch boundaries, so the registered form is a smoke and the
 multi-batch semantics are pinned in tests/test_streaming.py.
 
+Every query runs through ``session.drain``, which owns its name,
+shuffle partitions, checkpoint, wait, stall timeout and cleanup; an op
+keeps only its plan and its sink body (foreachBatch, foreach, a
+format). ``_fold_versions`` is the one foreachBatch fold into versioned
+``sink/v<batch>`` parquet state.
+
 This mirrors the reference's ingest path (Event Hub -> Stream Analytics
 hourly archival; SURVEY.md §3.1 [UPSTREAM, recalled]) as
 readStream -> windowed agg -> sink. At scale the state store is
@@ -19,8 +25,8 @@ bound it; nothing here accumulates unbounded driver state.
 
 from __future__ import annotations
 
-import itertools
 import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,11 +36,9 @@ from pyspark.sql import types as T
 from ..compat import bcount, dsum, dsum_sql, epoch_us, epoch_us_sql
 from ..operators.scans import _EVENTS_RAW_SCHEMA
 from ..operators.sketches import _hll_sql
-from ..session import detach_view, session_conf
+from ..session import drain, session_conf
 from ..sources.derived import build_once, scratch_dir
 from ..sources.tables import load_table, raw_ts_to_timestamp
-
-_SEQ = itertools.count(1)  # single next() call is atomic under CPython
 
 _MULTI_FILES = 4  # micro-batches in the multi-batch streaming forms
 
@@ -167,63 +171,6 @@ def _docs_stream_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# State-store partition count for every drained streaming query. A
-# knob, not a semantic (state partitioning is how these operators
-# scale out on a cluster); env-overridable so partition-count
-# experiments don't need a code edit. Default pinned at the measured
-# local optimum (32 -> 8 cut the 4-batch stream-stream join 40 s ->
-# 7 s at sf0.1; the round-11 order-balanced 8/16/32 A/B confirmed 8:
-# 32 is 1.6x worse across the board, and 8 vs 16 splits by sub-family
-# inside the noise envelope — see OPTIMIZATION_r11.md).
-_STATE_PARTITIONS = os.environ.get("C360_STREAM_STATE_PARTITIONS", "8")
-
-
-def _state_partitions_conf(spark: SparkSession) -> dict[str, str]:
-    """The drain's shuffle-partition override: shrink to
-    _STATE_PARTITIONS only when the session's value is larger."""
-    try:
-        shrink = int(spark.conf.get("spark.sql.shuffle.partitions")) > int(_STATE_PARTITIONS)
-    except (TypeError, ValueError):
-        shrink = False
-    return {"spark.sql.shuffle.partitions": _STATE_PARTITIONS} if shrink else {}
-
-
-def _drain_to_memory(df: DataFrame, mode: str, min_batches: int = 1) -> DataFrame:
-    """Run one availableNow pass into a uniquely-named memory sink and
-    return its rows; the sink's catalog entry is dropped.
-    ``min_batches`` asserts the run really was incremental (multi-batch
-    forms must not silently collapse into a single batch, or they'd stop
-    exercising cross-batch state merge).
-
-    State-store sizing: a streaming query creates one state store per
-    shuffle partition per stateful operator PER BATCH COMMIT, and the
-    HDFS-backed provider snapshots each store every batch - at local
-    test volumes that fixed cost dwarfs the data (measured: the 4-batch
-    stream-stream join drops 40s -> 7s going from 32 to 8 state
-    partitions at sf0.1). The partition count is pinned at query START,
-    so it is set here and restored after the drain; on a real cluster
-    you would size it to cores (state partitioning is exactly how these
-    operators scale out) - it is a knob, not a semantic."""
-    spark = df.sparkSession
-    name = f"c360_stream_{next(_SEQ)}"
-    with session_conf(spark, _state_partitions_conf(spark)):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sink = detach_view(spark, name)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    if n_batches < min_batches:
-        raise AssertionError(
-            f"expected >= {min_batches} non-empty micro-batches, got {n_batches}"
-        )
-    return sink
-
-
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows x event_type (the reference's hourly
     archival shape). Epoch-aligned buckets match DuckDB time_bucket."""
@@ -238,7 +185,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return _drain_to_memory(out, "complete")
+    return drain(out, mode="complete")[0]
 
 
 _TUMBLING_SQL = f"""
@@ -262,7 +209,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("window.end")).cast("long").alias("win_end_us"),
         "n_events",
     )
-    return _drain_to_memory(out, "complete")
+    return drain(out, mode="complete")[0]
 
 
 # An event at t belongs to the 4 sliding windows starting at
@@ -291,7 +238,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("session_window.end")).cast("long").alias("sess_end_us"),
         "n_events",
     )
-    return _drain_to_memory(out, "complete")
+    return drain(out, mode="complete")[0]
 
 
 _SESSION_SQL = """
@@ -330,7 +277,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_events",
     )
-    return _drain_to_memory(out, "append")
+    return drain(out, mode="append")[0]
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,7 +289,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _events_stream(spark, sf_dir)
     doubled = a.unionByName(b).withWatermark("ts", "10 minutes")
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select("event_id")
-    return _drain_to_memory(deduped, "append")
+    return drain(deduped, mode="append")[0]
 
 
 _DEDUP_SQL = "SELECT event_id FROM events"
@@ -428,7 +375,7 @@ def stream_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes a qualifying run, so the result is deterministic and batch-
     expressible -> full oracle (win_error_burst restricted to runs
     followed by a later non-error event)."""
-    return _drain_to_memory(_stream_error_burst(_events_stream(spark, sf_dir)), "update")
+    return drain(_stream_error_burst(_events_stream(spark, sf_dir)), mode="update")[0]
 
 
 def stream_error_burst_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,11 +383,11 @@ def stream_error_burst_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose errors span a batch boundary must be stitched from state —
     the pattern the single-batch form never exercises. Same closed-run
     oracle."""
-    return _drain_to_memory(
+    return drain(
         _stream_error_burst(_events_stream_multi(spark, sf_dir)),
-        "update",
+        mode="update",
         min_batches=2,
-    )
+    )[0]
 
 
 _ERROR_BURST_STREAM_SQL = f"""
@@ -491,7 +438,7 @@ def stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _drain_to_memory(counted, "update")
+    return drain(counted, mode="update")[0]
 
 
 _STATEFUL_SQL = """
@@ -516,7 +463,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"),
         dsum("value").alias("sum_value"),
     )
-    return _drain_to_memory(agg, "complete")
+    return drain(agg, mode="complete")[0]
 
 
 _STREAM_STATIC_SQL = f"""
@@ -526,6 +473,30 @@ SELECT c_mktsegment, event_type,
 FROM events JOIN customer ON user_id = c_custkey
 GROUP BY 1, 2
 """
+
+
+def _fold_versions(
+    stream: DataFrame,
+    sink: str,
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> DataFrame:
+    """foreachBatch fold of ``stream`` into versioned parquet state:
+    batch ``b`` writes ``step(batch, prev)`` to ``sink/v<b>``, where
+    ``prev`` reads the previous version (None for the first batch), and
+    the last version is returned. One write job per batch; the dir being
+    read is never overwritten, and a retried batch id overwrites its
+    own version dir, so the sink stays exactly-once."""
+    last: list[str] = []
+
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        prev = batch_df.sparkSession.read.parquet(last[-1]) if last else None
+        out = os.path.join(sink, f"v{batch_id}")
+        step(batch_df, prev).write.mode("overwrite").parquet(out)
+        last.append(out)
+
+    shutil.rmtree(sink, ignore_errors=True)
+    drain(stream, lambda w: w.foreachBatch(commit))
+    return stream.sparkSession.read.parquet(last[-1])
 
 
 def _run_foreachbatch_merge(
@@ -541,44 +512,25 @@ def _run_foreachbatch_merge(
     one-shot decimal sum no matter how many micro-batches the source
     splits into; it is cast to double only on the final read."""
 
-    # Each batch commits the merged state as a NEW version dir and the
-    # next batch reads its predecessor: same read-union-reaggregate
-    # merge, but one write job per batch instead of the old tmp-write +
-    # copy-back (2 writes + 1 re-read per batch, paid only because
-    # overwriting the dir being read breaks — r12, guide §1.2 "don't
-    # compute things you throw away"). Retried batch ids overwrite
-    # their own version dir, so the sink stays exactly-once.
-    last = {"dir": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         agg = batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(F.col("value").cast("decimal(30,6)"))
             .cast("decimal(30,6)")
             .alias("sum_dec"),
         )
-        if last["dir"] is not None:
-            agg = (
-                spark_l.read.parquet(last["dir"])
-                .unionByName(agg)
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_events").cast("long").alias("n_events"),
-                    F.sum("sum_dec").cast("decimal(30,6)").alias("sum_dec"),
-                )
+        if prev is None:
+            return agg
+        return (
+            prev.unionByName(agg)
+            .groupBy("user_id")
+            .agg(
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.sum("sum_dec").cast("decimal(30,6)").alias("sum_dec"),
             )
-        out = os.path.join(sink, f"v{batch_id}")
-        agg.write.mode("overwrite").parquet(out)
-        last["dir"] = out
+        )
 
-    import shutil
-
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(sink + ".tmp", ignore_errors=True)
-    q = ev.writeStream.foreachBatch(merge_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(last["dir"]).select(
+    return _fold_versions(ev, sink, merge).select(
         "user_id", "n_events", F.col("sum_dec").cast("double").alias("sum_value")
     )
 
@@ -629,7 +581,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("view_ts").cast("long").alias("view_us"),
         F.unix_micros("buy_ts").cast("long").alias("buy_us"),
     )
-    return _drain_to_memory(out, "append")
+    return drain(out, mode="append")[0]
 
 
 _STREAM_STREAM_SQL = """
@@ -671,7 +623,7 @@ def stream_tumbling_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    return _drain_to_memory(out, "complete", min_batches=2)
+    return drain(out, mode="complete", min_batches=2)[0]
 
 
 def stream_session_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -688,7 +640,7 @@ def stream_session_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("session_window.end")).cast("long").alias("sess_end_us"),
         "n_events",
     )
-    return _drain_to_memory(out, "complete", min_batches=2)
+    return drain(out, mode="complete", min_batches=2)[0]
 
 
 def stream_stateful_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,7 +659,7 @@ def stream_stateful_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    updates = _drain_to_memory(counted, "update", min_batches=2)
+    updates = drain(counted, mode="update", min_batches=2)[0]
     return updates.groupBy("user_id").agg(
         F.max("n_events").cast("long").alias("n_events")
     )
@@ -764,7 +716,7 @@ def stream_stream_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("view_ts").cast("long").alias("view_us"),
         F.unix_micros("buy_ts").cast("long").alias("buy_us"),
     )
-    return _drain_to_memory(out, "append", min_batches=2)
+    return drain(out, mode="append", min_batches=2)[0]
 
 
 def stream_foreachbatch_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -893,7 +845,7 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        return _drain_to_memory(out, "update")
+        return drain(out, mode="update")[0]
 
 
 def stream_transform_state_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -917,7 +869,7 @@ def stream_transform_state_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        updates = _drain_to_memory(out, "update", min_batches=2)
+        updates = drain(out, mode="update", min_batches=2)[0]
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         updates.withColumn("rn", F.row_number().over(w))
@@ -996,7 +948,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-purchase credit assignment: the last-touch channel is resolved
     AS EVENTS ARRIVE from per-user state instead of a window over the
     at-rest table. State is one string per user — O(|users|) store."""
-    return _drain_to_memory(_stream_attribution(_events_stream(spark, sf_dir)), "update")
+    return drain(_stream_attribution(_events_stream(spark, sf_dir)), mode="update")[0]
 
 
 def stream_attribution_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1004,11 +956,11 @@ def stream_attribution_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase whose most recent touch happened in an EARLIER batch must
     pull the channel from the state store — the cross-batch handoff the
     single-batch form never exercises. Same batch oracle."""
-    return _drain_to_memory(
+    return drain(
         _stream_attribution(_events_stream_multi(spark, sf_dir)),
-        "update",
+        mode="update",
         min_batches=2,
-    )
+    )[0]
 
 
 _ATTR_STREAM_SQL = f"""
@@ -1059,8 +1011,6 @@ def _run_stream_cdc(spark: SparkSession, sf_dir: str, qid: str, multi: bool) -> 
     table version, so the CDC history is time-travelable for free.
     Final read must equal the one-shot batch apply (cdc_apply_log's
     oracle): streaming order composes because batch seq ranges ascend."""
-    import shutil
-
     from ..sources.lakehouse import ManifestTable
 
     src = _cdc_multifile_src(spark, sf_dir)
@@ -1113,8 +1063,7 @@ def _run_stream_cdc(spark: SparkSession, sf_dir: str, qid: str, multi: bool) -> 
     if multi:
         reader = reader.option("maxFilesPerTrigger", 1)
     stream = reader.parquet(src)
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(stream, lambda w: w.foreachBatch(apply_batch))
     if multi and table.latest_version() < _CDC_FILES:
         raise AssertionError(
             f"expected {_CDC_FILES} CDC micro-batches, got {table.latest_version()}"
@@ -1161,7 +1110,7 @@ def stream_sliding_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("window.end")).cast("long").alias("win_end_us"),
         "n_events",
     )
-    return _drain_to_memory(out, "complete", min_batches=2)
+    return drain(out, mode="complete", min_batches=2)[0]
 
 
 def stream_dedup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1173,7 +1122,7 @@ def stream_dedup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _events_stream_multi(spark, sf_dir)
     doubled = a.unionByName(b).withWatermark("ts", "10 minutes")
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select("event_id")
-    return _drain_to_memory(deduped, "append", min_batches=2)
+    return drain(deduped, mode="append", min_batches=2)[0]
 
 
 _STREAM_CDC_SQL_SUFFIX = """
@@ -1228,36 +1177,17 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sink = scratch_dir("stream_hll_merge", sf_dir)
 
-    # Versioned per-batch state commits (see _run_foreachbatch_merge):
-    # one write job per batch instead of tmp-write + copy-back.
-    last = {"dir": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         regs = registers_from(batch_df.select("event_type", "user_id"))
-        if last["dir"] is not None:
-            regs = (
-                spark_l.read.parquet(last["dir"])
-                .unionByName(regs)
-                .groupBy("event_type", "bucket")
-                .agg(F.max("reg").cast("int").alias("reg"))
-            )
-        out = os.path.join(sink, f"v{batch_id}")
-        regs.write.mode("overwrite").parquet(out)
-        last["dir"] = out
+        if prev is None:
+            return regs
+        return (
+            prev.unionByName(regs)
+            .groupBy("event_type", "bucket")
+            .agg(F.max("reg").cast("int").alias("reg"))
+        )
 
-    import shutil
-
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(sink + ".tmp", ignore_errors=True)
-    q = (
-        _events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return hll_output(spark.read.parquet(last["dir"]))
+    return hll_output(_fold_versions(_events_stream(spark, sf_dir), sink, merge))
 
 
 def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1286,30 +1216,11 @@ def stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    # Versioned per-batch state commits (see _run_foreachbatch_merge).
-    last = {"dir": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         bits = bits_of(batch_df.select("event_type", "user_id"))
-        if last["dir"] is not None:
-            bits = spark_l.read.parquet(last["dir"]).unionByName(bits).distinct()
-        out = os.path.join(sink, f"v{batch_id}")
-        bits.write.mode("overwrite").parquet(out)
-        last["dir"] = out
+        return bits if prev is None else prev.unionByName(bits).distinct()
 
-    import shutil
-
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(sink + ".tmp", ignore_errors=True)
-    q = (
-        _events_stream_multi(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    bits = spark.read.parquet(last["dir"])
+    bits = _fold_versions(_events_stream_multi(spark, sf_dir), sink, merge)
     bits = bits.unionByName(
         bits.select(F.lit("__all__").alias("event_type"), "pos").distinct()
     )
@@ -1394,16 +1305,8 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    import shutil
-
     shutil.rmtree(sink, ignore_errors=True)
-    q = (
-        _events_stream_multi(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(_events_stream_multi(spark, sf_dir), lambda w: w.foreachBatch(merge_batch))
     cells = (
         spark.read.option("basePath", sink)
         .parquet(sink + "/batch=*")
@@ -1474,11 +1377,7 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn")
         )
 
-    # Versioned per-batch state commits (see _run_foreachbatch_merge).
-    last = {"dir": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         sample = bottomk(
             batch_df.select(
                 "event_type",
@@ -1486,26 +1385,9 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.md5(F.col("event_id").cast("string")).alias("rk"),
             )
         )
-        if last["dir"] is not None:
-            sample = bottomk(
-                spark_l.read.parquet(last["dir"]).unionByName(sample)
-            )
-        out = os.path.join(sink, f"v{batch_id}")
-        sample.write.mode("overwrite").parquet(out)
-        last["dir"] = out
+        return sample if prev is None else bottomk(prev.unionByName(sample))
 
-    import shutil
-
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(sink + ".tmp", ignore_errors=True)
-    q = (
-        _events_stream_multi(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sample = spark.read.parquet(last["dir"])
+    sample = _fold_versions(_events_stream_multi(spark, sf_dir), sink, merge)
     wv = Window.partitionBy("event_type").orderBy("val", "rk")
     wn = Window.partitionBy("event_type")
     pos = sample.withColumn("vn", F.row_number().over(wv)).withColumn(
@@ -1643,8 +1525,6 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigns version numbers with one window and must equal the batch
     oracle replaying the whole log — regardless of how the range
     partitioner drew the file/batch boundaries."""
-    import shutil
-
     from ..sources.lakehouse import ManifestTable
 
     src = _cdc_multifile_src(spark, sf_dir)
@@ -1699,8 +1579,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     reader = spark.readStream.schema(_CDC_LOG_SCHEMA).option("maxFilesPerTrigger", 1)
     stream = reader.parquet(src)
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(stream, lambda w: w.foreachBatch(apply_batch))
     if table.latest_version() < _CDC_FILES:
         raise AssertionError(
             f"expected {_CDC_FILES} micro-batches, got {table.latest_version()}"
@@ -1844,7 +1723,7 @@ def _run_stream_stream_outer(
         F.unix_micros("view_ts").cast("long").alias("view_us"),
         F.unix_micros("buy_ts").cast("long").alias("buy_us"),
     )
-    sink = _drain_to_memory(out, "append", min_batches=min_batches)
+    sink = drain(out, mode="append", min_batches=min_batches)[0]
     # Drop the sentinel's own (unmatched, null-padded) rows.
     return sink.where(F.col("user_id") >= 0)
 
@@ -1918,7 +1797,7 @@ def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-        return _drain_to_memory(out, "complete", min_batches=2)
+        return drain(out, mode="complete", min_batches=2)[0]
 
 
 QUERIES["stream_stateful_rocksdb"] = stream_stateful_rocksdb
@@ -1960,20 +1839,20 @@ def _dyn_session_agg(ev: DataFrame) -> DataFrame:
 
 def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-drain streaming sessionization with per-event gaps."""
-    return _drain_to_memory(
-        _dyn_session_agg(_events_stream(spark, sf_dir)), "complete"
-    )
+    return drain(
+        _dyn_session_agg(_events_stream(spark, sf_dir)), mode="complete"
+    )[0]
 
 
 def stream_session_dynamic_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-gap sessions over 4 chronological micro-batches: an open
     session's expiry horizon depends on which event types it already
     contains, and later batches must extend or close it accordingly."""
-    return _drain_to_memory(
+    return drain(
         _dyn_session_agg(_events_stream_multi(spark, sf_dir)),
-        "complete",
+        mode="complete",
         min_batches=2,
-    )
+    )[0]
 
 
 _DYN_SESSION_SQL = """
@@ -2081,7 +1960,7 @@ def _chained_rollup(ev: DataFrame, min_batches: int = 1) -> DataFrame:
         "n_events",
         "n_user_hours",
     )
-    return _drain_to_memory(out, "append", min_batches=min_batches)
+    return drain(out, mode="append", min_batches=min_batches)[0]
 
 
 def stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2123,7 +2002,7 @@ ORACLE["stream_chained_agg_multi"] = _CHAINED_SQL
 def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level ForeachWriter sink (the per-row sibling of
     stream_foreachbatch_sink): the 4-batch chronological events replay
-    is written through ``writeStream.foreach(writer)`` exercising the
+    is written through a ``foreach(writer)`` sink, exercising the
     full open(partition, epoch) / process(row) / close(error)
     lifecycle. Exactly-once under task retry comes from EPOCH KEYING:
     each (partition, epoch) writes to a deterministic file name via a
@@ -2134,12 +2013,9 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated; a dropped, duplicated, or torn epoch shifts the
     counts and hash-mismatches against the full-table oracle."""
     import glob
-    import shutil
 
     out = scratch_dir("stream_foreach_sink", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
-    ckpt = scratch_dir("stream_foreach_sink_ckpt", sf_dir)
-    shutil.rmtree(ckpt, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
     class _EpochKeyedRowWriter:
@@ -2184,13 +2060,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "user_id",
     )
-    q = (
-        ev.writeStream.foreach(_EpochKeyedRowWriter(out))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, lambda w: w.foreach(_EpochKeyedRowWriter(out)))
     files = glob.glob(os.path.join(out, "p*-e*.jsonl"))
     epochs = {os.path.basename(f).rsplit("-e", 1)[1] for f in files}
     if len(epochs) < 2:
@@ -2239,8 +2109,6 @@ def source_rate_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the source generates rows executor-side (numPartitions=4
     here); nothing about the pattern changes with rowsPerBatch=5e8 on
     a cluster — it is the standard ingest-throughput harness."""
-    import time as _time
-
     cutoff = _RATE_ROWS * _RATE_BATCHES
     raw = (
         spark.readStream.format("rate-micro-batch")
@@ -2250,28 +2118,13 @@ def source_rate_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("advanceMillisPerBatch", 60000)
         .load()
     )
-    name = f"c360_stream_{next(_SEQ)}"
-    q = (
-        raw.select("timestamp", "value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
+    sink, _ = drain(
+        raw.select("timestamp", "value"),
+        trigger={"processingTime": "0 seconds"},
+        until=lambda progress: sum(p["numInputRows"] for p in progress) >= cutoff,
+        min_batches=_RATE_BATCHES,
     )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= (
-                _RATE_BATCHES
-            ):
-                break
-            _time.sleep(0.1)
-        else:
-            raise AssertionError("rate-micro-batch never reached 3 batches")
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    sink = detach_view(spark, name).where(F.col("value") < cutoff)
+    sink = sink.where(F.col("value") < cutoff)
     return sink.agg(
         bcount().alias("n"),
         F.sum("value").cast("long").alias("sum_v"),

@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ops import _drain_to_memory, _events_stream, _events_stream_multi
+from ..session import drain
+from .ops import _events_stream, _events_stream_multi
 
 _QUOTA_N = 3
 
@@ -92,18 +93,18 @@ def _rate_limit(ev: DataFrame) -> DataFrame:
 
 
 def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _drain_to_memory(
-        _rate_limit(_events_stream(spark, sf_dir)), "update"
-    )
+    return drain(
+        _rate_limit(_events_stream(spark, sf_dir)), mode="update"
+    )[0]
 
 
 def stream_rate_limit_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quota counters resume from the state store across the 4-batch
     chronological replay — an over-admit or re-admit would diverge
     from the batch row_number oracle immediately."""
-    return _drain_to_memory(
-        _rate_limit(_events_stream_multi(spark, sf_dir)), "update", min_batches=2
-    )
+    return drain(
+        _rate_limit(_events_stream_multi(spark, sf_dir)), mode="update", min_batches=2
+    )[0]
 
 
 _RATE_LIMIT_SQL = f"""

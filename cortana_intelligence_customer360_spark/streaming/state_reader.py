@@ -31,30 +31,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import detach_view, session_conf
+from ..session import STATE_PARTITIONS, drain
 from ..sources.derived import scratch_dir
 from ..sources.tables import load_table
-from .ops import _MULTI_FILES, _STATE_PARTITIONS, _events_multifile_src, _SEQ
-
-
-def _run_checkpointed(agg: DataFrame, ck: str) -> tuple[int, DataFrame]:
-    """availableNow drain into a memory sink under the given
-    checkpoint; returns the number of input rows this RUN processed
-    (the resume proof: a resumed run must see only the new files) and
-    the sink's rows."""
-    spark = agg.sparkSession
-    name = f"c360_stream_{next(_SEQ)}"
-    with session_conf(spark, {"spark.sql.shuffle.partitions": _STATE_PARTITIONS}):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return sum(int(p["numInputRows"]) for p in q.recentProgress), detach_view(spark, name)
+from .ops import _MULTI_FILES, _events_multifile_src
 
 
 _EVENTS_US_SCHEMA = (
@@ -63,16 +43,24 @@ _EVENTS_US_SCHEMA = (
 )
 
 
+def _state_ck(spark: SparkSession, sf_dir: str) -> str:
+    """scan_state_store's checkpoint. It lives inside the replay dir it
+    drains (Spark's file listing skips ``_``-prefixed entries), so a
+    rebuild of that dir, whose files get new names, also drops the state
+    counted from the old files instead of adding the new ones to it."""
+    return os.path.join(_events_multifile_src(spark, sf_dir), "_state_ck")
+
+
 def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain a checkpointed per-type count aggregation, then read the
     aggregation STATE as a batch table and flatten it. Idempotent: a
     re-run against an existing checkpoint sees no new files and leaves
     state untouched."""
     src = _events_multifile_src(spark, sf_dir)
-    ck = scratch_dir("scan_state_store_ck", sf_dir)
+    ck = _state_ck(spark, sf_dir)
     raw = spark.readStream.schema(_EVENTS_US_SCHEMA).parquet(src)
     agg = raw.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    _run_checkpointed(agg, ck)
+    drain(agg, mode="complete", checkpoint=ck, min_batches=0)
     state = spark.read.format("statestore").load(ck)
     # The state schema carries the PHYSICAL aggregate name ("count"),
     # not the logical alias — part of what this reader exposes.
@@ -93,8 +81,7 @@ def scan_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     same checkpoint (names, partition counts, committed batch range).
     Deterministic because the replay file count fixes maxBatchId."""
     scan_state_store(spark, sf_dir)  # ensure the checkpoint exists
-    ck = scratch_dir("scan_state_store_ck", sf_dir)
-    md = spark.read.format("state-metadata").load(ck)
+    md = spark.read.format("state-metadata").load(_state_ck(spark, sf_dir))
     return md.select(
         F.col("operatorId").cast("long").alias("operator_id"),
         "operatorName",
@@ -109,7 +96,7 @@ _STATE_METADATA_SQL = f"""
 SELECT CAST(0 AS BIGINT) AS operator_id,
        'stateStoreSave' AS operatorName,
        'default' AS stateStoreName,
-       CAST({_STATE_PARTITIONS} AS BIGINT) AS n_partitions,
+       CAST({STATE_PARTITIONS} AS BIGINT) AS n_partitions,
        CAST(0 AS BIGINT) AS min_batch_id,
        CAST(0 AS BIGINT) AS max_batch_id
 """
@@ -139,13 +126,19 @@ def stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("event_id")).cast("long").alias("sum_eid"),
         )
 
+    def _run() -> tuple[int, DataFrame]:
+        # Rows this RUN read: the resume proof (a resumed run must see
+        # only the new files), plus the sink's rows.
+        rows, progress = drain(_stream_agg(), mode="complete", checkpoint=ck)
+        return sum(int(p["numInputRows"]) for p in progress), rows
+
     for p in parts[:half]:
         shutil.copy2(os.path.join(src, p), os.path.join(stage, p))
-    n_first, _ = _run_checkpointed(_stream_agg(), ck)
+    n_first, _ = _run()
 
     for p in parts[half:]:
         shutil.copy2(os.path.join(src, p), os.path.join(stage, p))
-    n_second, totals = _run_checkpointed(_stream_agg(), ck)
+    n_second, totals = _run()
     total = load_table(spark, sf_dir, "events").count()
     # The resume proof: run 2 saw ONLY the late files. If the
     # checkpoint handoff were broken (fresh offsets), run 2 would

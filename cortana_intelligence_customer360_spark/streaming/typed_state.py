@@ -30,12 +30,11 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.window import Window
 
-from ..session import detach_view, session_conf
+from ..session import drain, session_conf
 from ..sources.tables import load_table
 from .ops import (
     _ROCKSDB_CONF,
     _docs_stream,  # noqa: F401  (kept for symmetry; events used below)
-    _drain_to_memory,
     _events_stream,
     _events_stream_multi,
     _pbshim,
@@ -207,6 +206,20 @@ class _DeadlineTimerProcessor(StatefulProcessor):
         pass
 
 
+def _backlog_drained(progress: list) -> bool:
+    """True once a batch read zero input rows after one that read some.
+    In ProcessingTime time mode TransformWithStateExec.shouldRunAnotherBatch
+    is unconditionally true (processing-time timers/TTL may fire at any
+    wall-clock instant), so Trigger.AvailableNow never self-terminates:
+    it keeps scheduling empty batches forever (observed: epoch 160+
+    against a static 1-file source). The file source is static, so the
+    first empty batch after data proves every data batch committed."""
+    return (
+        any(p["numInputRows"] > 0 for p in progress)
+        and progress[-1]["numInputRows"] == 0
+    )
+
+
 def _run_tws(spark, stream, proc, out_schema, *, time_mode="None",
              event_time_col="", min_batches=1, stop_when_drained=False,
              initial_state=None, min_gap_ms=None):
@@ -220,11 +233,15 @@ def _run_tws(spark, stream, proc, out_schema, *, time_mode="None",
             eventTimeColumnName=event_time_col,
             initialState=initial_state,
         )
-        if stop_when_drained:
-            return _drain_until_empty(
-                out, "update", min_batches=min_batches, min_gap_ms=min_gap_ms
-            )
-        return _drain_to_memory(out, "update", min_batches=min_batches)
+        rows, progress = drain(
+            out,
+            mode="update",
+            until=_backlog_drained if stop_when_drained else None,
+            min_batches=min_batches,
+        )
+    if min_gap_ms is not None:
+        _assert_batch_gaps(progress, min_gap_ms)
+    return rows
 
 
 def _parse_prog_ts(s: str) -> float:
@@ -260,57 +277,6 @@ def _assert_batch_gaps(prog: list, min_gap_ms: float) -> None:
                 f"{a['batchId']}->{b['batchId']} committed {gap_ms:.3f} ms "
                 f"apart, <= ttl {min_gap_ms} ms — state cannot have expired"
             )
-
-
-def _drain_until_empty(
-    df: DataFrame, mode: str, min_batches: int = 1, min_gap_ms: float | None = None
-) -> DataFrame:
-    """Drain variant for ProcessingTime-mode transformWithState:
-    TransformWithStateExec.shouldRunAnotherBatch returns TRUE
-    unconditionally in that time mode (processing-time timers/TTL may
-    fire at any wall-clock instant), so Trigger.AvailableNow never
-    self-terminates — it keeps scheduling empty batches forever
-    (observed: epoch 160+ against a static 1-file source). The file
-    source is static, so once a batch reads ZERO input rows the
-    backlog is provably exhausted and every data batch is committed;
-    stop the query at that point."""
-    import time as _time
-
-    from .ops import _SEQ, _state_partitions_conf
-
-    spark = df.sparkSession
-    name = f"c360_stream_{next(_SEQ)}"
-    with session_conf(spark, _state_partitions_conf(spark)):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = _time.time() + 600
-        n_batches = 0
-        prog: list = []
-        while _time.time() < deadline and q.isActive:
-            prog = q.recentProgress
-            n_batches = len([p for p in prog if p["numInputRows"] > 0])
-            if (
-                n_batches >= min_batches
-                and prog
-                and prog[-1]["numInputRows"] == 0
-            ):
-                q.stop()
-                break
-            _time.sleep(0.2)
-        q.awaitTermination(120)
-    sink = detach_view(spark, name)
-    if n_batches < min_batches:
-        raise AssertionError(
-            f"expected >= {min_batches} non-empty micro-batches, got {n_batches}"
-        )
-    if min_gap_ms is not None:
-        _assert_batch_gaps(prog, min_gap_ms)
-    return sink
 
 
 def _latest_per(df: DataFrame, keys: list[str], seq_col: str) -> DataFrame:

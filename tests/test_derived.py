@@ -100,3 +100,24 @@ def test_ivf_index_key_sees_subsecond_rewrite(tmp_path):
     before = _ivf_index_dir(sf_dir, 16)
     os.utime(path, ns=(sec + 500_000_000, sec + 500_000_000))
     assert _ivf_index_dir(sf_dir, 16) != before
+
+
+def test_state_checkpoint_follows_replay_rebuild(spark, tmp_path):
+    """scan_state_store keeps its checkpoint across calls; when its
+    replay files are rebuilt for new inputs, the state must be counted
+    from the new files only."""
+    from cortana_intelligence_customer360_spark.streaming import state_reader
+
+    qid = "scan_state_store"
+    sf_dir = _copy_inputs(str(tmp_path / "sf_t"), ["events"])
+    try:
+        for _ in range(2):
+            con = duckdb.connect()
+            path = os.path.join(sf_dir, "events.parquet")
+            con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+            expected = con.execute(state_reader.ORACLE[qid]).df()
+            con.close()
+            assert_frames_match(state_reader.scan_state_store(spark, sf_dir), expected, qid)
+            _keep_half(sf_dir, "events")
+    finally:
+        shutil.rmtree(scratch_dir("events_multifile", sf_dir), ignore_errors=True)
